@@ -9,6 +9,16 @@ knob is chosen to also be the right default on a real cluster at 100 TB:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   are stable across deployments.
 - Arrow enabled so the Pandas-UDF slow path is batch-vectorized.
+- Local masters only: ``spark.sql.sources.parallelPartitionDiscovery.
+  threshold`` is raised to ``2147483647``, so listing an explicit file
+  list stays on the driver.  Past the default 32 paths Spark lists with a
+  distributed job of one task per file; in local mode those tasks run on
+  the driver JVM's own threads, so the job adds a task launch per file
+  and no parallelism.  The streaming file source hands every trigger's
+  new spool files to such a listing (``getBatch``), and every
+  ``ManifestTable`` read passes its live files the same way.  Cluster
+  masters keep Spark's default: there the listing job spreads over
+  executors and does add parallelism.
 """
 
 from __future__ import annotations
@@ -66,6 +76,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

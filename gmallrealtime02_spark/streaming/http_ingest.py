@@ -14,12 +14,21 @@ downstream the reference's Kafka topics feed — same routing semantics,
 same at-least-once handoff, swappable for the Kafka source builders in
 ``streaming/kafka.py`` when a broker exists.
 
+Durability: a POST is published (renamed into its route directory)
+before its ``success`` reply goes out, so every acked payload is
+already visible to the file source and survives a collector crash.
+There is no fsync, so a host power loss can still drop the OS's
+unflushed pages.
+
 Scale notes: the collector is the reference's ingress tier, not a Spark
 operator — horizontal scale = N collector processes behind a balancer,
 each spooling to its own prefix (filenames embed a uuid4, so spools
-merge collision-free onto shared storage).  One file per request is the
-test-scale setting; ``batch_size`` coalesces N payloads per spool file
-to keep file-listing pressure bounded in sustained use.
+merge collision-free onto shared storage).  One file per POST is cheap
+per trigger on a local master: the session lists a trigger's new files
+on the driver (see ``session.py``).  What remains in sustained use is
+the file source's ``latestOffset``, which lists the whole route
+directory on every trigger — O(files ever spooled).  The Kafka source
+builders in ``streaming/kafka.py`` do not pay it.
 """
 
 from __future__ import annotations
@@ -44,19 +53,13 @@ def route_of(obj: dict) -> str:
 
 class LogCollector:
     """Minimal ``/applog`` collector: validates JSON, routes, spools
-    atomically.  ``port=0`` binds an ephemeral port (tests)."""
+    each payload atomically before acking it.  ``port=0`` binds an
+    ephemeral port (tests)."""
 
     def __init__(
-        self,
-        spool_dir: str,
-        host: str = "127.0.0.1",
-        port: int = 0,
-        batch_size: int = 1,
+        self, spool_dir: str, host: str = "127.0.0.1", port: int = 0
     ) -> None:
         self.spool_dir = spool_dir
-        self.batch_size = max(1, batch_size)
-        self._pending: dict[str, list[str]] = {START_ROUTE: [], EVENT_ROUTE: []}
-        self._lock = threading.Lock()
         for route in (START_ROUTE, EVENT_ROUTE):
             os.makedirs(os.path.join(spool_dir, route), exist_ok=True)
         os.makedirs(os.path.join(spool_dir, ".tmp"), exist_ok=True)
@@ -102,28 +105,12 @@ class LogCollector:
     def stop(self) -> None:
         self._server.shutdown()
         self._server.server_close()
-        self.flush()
 
     def _spool(self, route: str, line: str) -> None:
-        with self._lock:
-            self._pending[route].append(line)
-            if len(self._pending[route]) >= self.batch_size:
-                self._publish(route)
-
-    def flush(self) -> None:
-        """Publish any sub-batch remainders (call at shutdown/test end)."""
-        with self._lock:
-            for route in (START_ROUTE, EVENT_ROUTE):
-                if self._pending[route]:
-                    self._publish(route)
-
-    def _publish(self, route: str) -> None:
-        # caller holds the lock
-        lines, self._pending[route] = self._pending[route], []
         name = f"{uuid.uuid4().hex}.json"
         tmp = os.path.join(self.spool_dir, ".tmp", name)
         with open(tmp, "w", encoding="utf-8") as f:
-            f.write("\n".join(lines) + "\n")
+            f.write(line + "\n")
         os.rename(tmp, os.path.join(self.spool_dir, route, name))
 
 

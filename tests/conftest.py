@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
 
 import duckdb
 import pandas as pd
@@ -17,6 +19,43 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 def spark():
     s = get_spark(app_name="gmall_tests", shuffle_partitions=8)
     yield s
+
+
+class FiredJobs:
+    """Job groups whose jobs :func:`jobs_fired` counts; ``n`` is set when
+    the block exits."""
+
+    def __init__(self) -> None:
+        self.groups = [uuid.uuid4().hex]
+        self.n: int | None = None
+
+    def track(self, query) -> None:
+        """Count a streaming query's jobs too: its triggers run in a job
+        group of their own, named after the query's ``runId``."""
+        self.groups.append(str(query.runId))
+
+
+@contextlib.contextmanager
+def jobs_fired(spark):
+    """Count the Spark jobs fired inside the block.
+
+    The block runs in a fresh job group, restored on exit; the count is
+    ``statusTracker().getJobIdsForGroup`` over that group and any
+    tracked streaming query, after the listener bus has drained so no
+    job start is still in flight."""
+    sc = spark.sparkContext
+    fired = FiredJobs()
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(fired.groups[0], "jobs_fired")
+    try:
+        yield fired
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    fired.n = sum(len(tracker.getJobIdsForGroup(g)) for g in fired.groups)
 
 
 @pytest.fixture(scope="session")

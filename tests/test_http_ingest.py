@@ -75,34 +75,28 @@ def test_http_ingest_end_to_end(spark, tmp_path):
             assert all(r.start is None and r.page == "home" for r in rows)
 
 
-def test_http_ingest_batched_spool(spark, tmp_path):
-    """batch_size > 1 coalesces payloads per spool file; flush publishes
-    the remainder — no records lost at shutdown."""
+def test_http_ingest_acks_only_published_payloads(tmp_path):
+    """Every ``success`` reply arrives after its payload is in a
+    published spool file — nothing acked waits in memory, so a crash
+    after the reply loses nothing and an idle collector holds no tail."""
     import os
 
     spool = str(tmp_path / "spool2")
-    col = LogCollector(spool, batch_size=4).start()
+    col = LogCollector(spool).start()
     host, port = col.address
     url = f"http://{host}:{port}/applog"
+    route_dir = os.path.join(spool, "event")
     try:
-        for i in range(6):  # 4 publish immediately, 2 stay pending
-            _post(url, {"mid": f"b{i}", "page": "x", "ts": i})
-        files_before = os.listdir(os.path.join(spool, "event"))
-        assert len(files_before) == 1
+        for i in range(6):
+            assert _post(url, {"mid": f"b{i}", "page": "x", "ts": i}) == "success"
+            published = set()
+            for name in os.listdir(route_dir):
+                with open(os.path.join(route_dir, name), encoding="utf-8") as f:
+                    published |= {json.loads(line)["mid"] for line in f}
+            assert published == {f"b{j}" for j in range(i + 1)}
+        assert os.listdir(os.path.join(spool, ".tmp")) == []
     finally:
-        col.stop()  # flush publishes the remainder
-    files_after = os.listdir(os.path.join(spool, "event"))
-    assert len(files_after) == 2
-    q = (
-        log_stream(spark, spool, "event", SCHEMA)
-        .writeStream.format("memory")
-        .queryName("ingest_batched")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = {r.mid for r in spark.sql("SELECT mid FROM ingest_batched").collect()}
-    assert got == {f"b{i}" for i in range(6)}
+        col.stop()
 
 
 def test_http_to_dau_full_chain(spark, tmp_path):
