@@ -44,11 +44,13 @@ plus a registered wrapper that calls ``materialized``.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 
 from pyspark.sql import DataFrame
 
+log = logging.getLogger(__name__)
 _PENDING: list[tuple[int, DataFrame]] = []
 _GEN: int = 0
 # Queue/generation mutations are lock-guarded: ann_recall_eval (and any
@@ -98,7 +100,8 @@ def release_pending() -> None:
         try:
             c.unpersist()
         except Exception:
-            pass  # session already stopped / cache GC'd
+            # session already stopped / cache GC'd: storage may leak
+            log.warning("release_pending: unpersist failed", exc_info=True)
 
 
 def materialized(result: DataFrame, *caches: DataFrame) -> DataFrame:
@@ -121,7 +124,9 @@ def materialized(result: DataFrame, *caches: DataFrame) -> DataFrame:
         try:
             keep.add(c.semanticHash())
         except Exception:
-            pass
+            log.warning(
+                "materialized: semanticHash of a new cache failed", exc_info=True
+            )
     to_drop: list[DataFrame] = []
     with _LOCK:
         survivors: list[tuple[int, DataFrame]] = []
@@ -134,12 +139,16 @@ def materialized(result: DataFrame, *caches: DataFrame) -> DataFrame:
                 if c.semanticHash() not in keep:
                     to_drop.append(c)
             except Exception:
-                pass
+                # dropped from the queue without an unpersist
+                log.warning(
+                    "materialized: semanticHash of a queued cache failed",
+                    exc_info=True,
+                )
         _PENDING.extend(survivors)
         _PENDING.extend((_GEN, c) for c in caches)
     for c in to_drop:
         try:
             c.unpersist()
         except Exception:
-            pass
+            log.warning("materialized: unpersist failed", exc_info=True)
     return result

@@ -5,13 +5,20 @@ Mapping:
 - DauApp (§3.1)          → ``streaming_dau``: watermarked dropDuplicates
   replaces the Redis SADD state (DauApp.scala:59-75); checkpointing
   replaces the Redis offset hash (OffsetManager.scala:14-46) outright.
+  ``start_dau_job`` commits each micro-batch as one dt-clustered append:
+  the stream already emits each (dt, mid) once, so the sink needs no
+  keyed merge — exactly-once comes from the checkpointed state plus the
+  sink's txn ledger, as Structured Streaming composes a replayable
+  source, checkpointed state and an idempotent sink.  The per-trigger
+  small files are ``ManifestTable.maintain()``'s to compact.
 - OdsGmallCanal (§3.2)   → ``streaming_ods_split``: one query with a
   per-record topic column instead of N per-table jobs.
 - Dim* apps (§3.2)       → ``streaming_dim_upsert``: foreachBatch keyed
-  upsert into a snapshot-isolated ManifestTable (replaces Phoenix/
-  HBase); all warehouse sinks here commit through the manifest layer —
-  atomic per-batch visibility, touched-files-only MERGE, exactly-once
-  replay via per-app txn watermarks (streaming/manifest.py).
+  upsert (touched-files-only MERGE) into a snapshot-isolated
+  ManifestTable (replaces Phoenix/HBase), the one job whose rows really
+  do update; all warehouse sinks here commit through the manifest
+  layer — atomic per-batch visibility, exactly-once replay via per-app
+  txn watermarks (streaming/manifest.py).
 - DwdOrder*/DwsOrderWide (§3.3) → ``streaming_order_wide``: watermarked
   stream-stream inner join — strictly more correct than the reference's
   overlapping 10s/5s windows + Redis dedup (J4+J5): no duplicate-from-
@@ -92,14 +99,25 @@ def start_dau_job(
     trigger: str | None = None,
 ) -> StreamingQuery:
     """The full DAU pipeline as a streaming query: dedup → idempotent
-    keyed upsert into the serving table (ES bulk K4 → parquet upsert).
+    append into the serving table (ES bulk K4 → parquet append).
 
     The serving table is a snapshot-isolated ``ManifestTable`` with
-    dt-stats: each micro-batch is one atomic MERGE commit that rewrites
-    only the files whose dt-range overlaps the batch (today's batch
-    touches today's files, never the history) — readers need no
-    coordination, and checkpoint replay after a crash is declined
-    idempotently via the per-app txn watermark.  Read the output with
+    dt-stats: each micro-batch is one atomic ``append`` commit of one
+    file per dt in the batch (``layout_by=["dt"]`` keeps each file's dt
+    range tight), with no read or rewrite of the live files.  No keyed
+    merge is needed because the append is already exactly-once:
+
+    - the stream emits each (dt, mid) at most once — every duplicate of
+      a day-scoped key falls within 24 h of its first occurrence, inside
+      the 48 h watermark that keeps the key's state, and later ones are
+      dropped as late;
+    - a checkpoint replay of a committed ``batch_id`` is declined by the
+      per-app txn watermark (``app_id="dau"``).
+
+    Every trigger adds small files (and a no-data trigger that only
+    advances the watermark publishes an empty version):
+    ``ManifestTable.maintain()`` is the table's housekeeping — compact
+    past its file budget, then vacuum.  Read the output with
     ``ManifestTable(out_path).read(spark)`` (or ``manifest.read_output``).
 
     ``trigger="5 seconds"`` reproduces the reference's micro-batch
@@ -112,7 +130,7 @@ def start_dau_job(
         w = w.trigger(processingTime=trigger)
     table = ManifestTable(out_path, stats_cols=["dt"])
     return w.foreachBatch(
-        make_manifest_upsert_sink(table, ["dt", "mid"], app_id="dau")
+        make_manifest_append_sink(table, app_id="dau", layout_by=["dt"])
     ).start()
 
 

@@ -2324,7 +2324,20 @@ class ManifestTable:
         """Audit log across retained versions (the DESCRIBE HISTORY
         analogue): one row per manifest with op, file count, total
         bytes, and what changed vs the parent — metadata-only except
-        the per-file size stat, read from the local filesystem."""
+        the per-file size stat, read from the local filesystem.  Data
+        files are immutable, so each distinct file is stat'ed once per
+        call: append-fed tables carry a growing file list through every
+        version, and a per-version stat would cost O(versions × files)."""
+        sizes: dict[str, int] = {}
+
+        def size(f: str) -> int:
+            if f not in sizes:
+                try:
+                    sizes[f] = os.path.getsize(os.path.join(self.data_dir, f))
+                except FileNotFoundError:
+                    sizes[f] = 0  # vacuumed: counts as no bytes
+            return sizes[f]
+
         out = []
         for v in self._versions():
             m = self.manifest(v)
@@ -2334,17 +2347,12 @@ class ManifestTable:
                 if v > 1 and os.path.exists(self._manifest_path(v - 1))
                 else set()
             )
-            sizes = [
-                os.path.getsize(os.path.join(self.data_dir, f))
-                for f in files
-                if os.path.exists(os.path.join(self.data_dir, f))
-            ]
             out.append(
                 {
                     "version": v,
                     "op": m.get("op"),
                     "n_files": len(files),
-                    "bytes": sum(sizes),
+                    "bytes": sum(size(f) for f in files),
                     "added_files": len([f for f in files if f not in prev]),
                     "removed_files": len(prev - set(files)),
                     "txn": m.get("txn", {}),
@@ -2485,7 +2493,7 @@ def make_manifest_upsert_sink(
     :meth:`ManifestTable.upsert` — one atomic manifest commit per batch,
     touched-files-only rewrite, ``txn=(app_id, batch_id)`` idempotence
     against checkpoint replay.  The manifest-backed replacement for
-    ``sinks.make_upsert_sink`` (K4/K5): same call-site contract, none of
+    ``sinks.make_upsert_sink`` (K5 dims): same call-site contract, none of
     the rename-swap exposure window or exclusive-access requirement."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -4,6 +4,8 @@ get bounded executor storage, re-runs stay warm)."""
 
 from __future__ import annotations
 
+import logging
+
 import pyspark.sql.functions as F
 
 from gmallrealtime02_spark import caching
@@ -108,6 +110,49 @@ def test_release_pending_survives_stopped_caches(spark):
     cache.unpersist()  # already gone — drain must not raise
     release_pending()
     assert not caching._PENDING
+
+
+class _Unreleasable:
+    """A queued cache whose release fails."""
+
+    def __init__(self, hashable: bool = True) -> None:
+        self.hashable = hashable
+
+    def semanticHash(self) -> int:
+        if not self.hashable:
+            raise RuntimeError("no plan")
+        return -1
+
+    def unpersist(self) -> None:
+        raise RuntimeError("session stopped")
+
+
+def test_release_failures_are_logged(spark, caplog):
+    """Each swallowed release failure logs a WARNING with the exception
+    attached; the drain itself still neither raises nor keeps the
+    failed entry."""
+    release_pending()
+    caplog.set_level(logging.WARNING, logger=caching.__name__)
+    caching._PENDING.append((caching._GEN, _Unreleasable()))
+    release_pending()
+    assert not caching._PENDING
+
+    caching._PENDING.append((caching._GEN, _Unreleasable()))
+    caching._PENDING.append((caching._GEN, _Unreleasable(hashable=False)))
+    begin_query()
+    out = materialized(spark.range(3), _Unreleasable(hashable=False))
+    assert out.count() == 3
+    assert len(caching._PENDING) == 1  # the new cache, queued as before
+    caching._PENDING.clear()
+
+    logged = [r for r in caplog.records if r.name == caching.__name__]
+    assert sorted(r.getMessage() for r in logged) == [
+        "materialized: semanticHash of a new cache failed",
+        "materialized: semanticHash of a queued cache failed",
+        "materialized: unpersist failed",
+        "release_pending: unpersist failed",
+    ]
+    assert all(r.levelno == logging.WARNING and r.exc_info for r in logged)
 
 
 def test_kmeans_fit_session_memo(spark, sf_dir):

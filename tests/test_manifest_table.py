@@ -362,6 +362,30 @@ def test_history_audit_log(spark, sf_dir, tmp_path):
     assert h[2]["txn"] == {"s": 1}  # watermark carried through compact
 
 
+def test_history_stats_each_data_file_once(spark, tmp_path, monkeypatch):
+    """history() over an append-fed table: every version carries the
+    growing file list, but each distinct data file is stat'ed once per
+    call (data files are immutable), and the bytes are unchanged."""
+    t = ManifestTable(str(tmp_path / "t"))
+    for lo in range(0, 50, 10):
+        t.append(spark.range(lo, lo + 10, 1, numPartitions=2))
+    want = [
+        sum(os.path.getsize(f) for f in t.files(v)) for v in range(1, 6)
+    ]
+    distinct = {f for v in range(1, 6) for f in t.files(v)}
+    calls: list[str] = []
+    getsize = os.path.getsize
+
+    def counting(path):
+        calls.append(path)
+        return getsize(path)
+
+    monkeypatch.setattr(os.path, "getsize", counting)
+    h = t.history()
+    assert [r["bytes"] for r in h] == want
+    assert sorted(calls) == sorted(distinct)
+
+
 def test_compact_declines_when_snapshot_rewritten(spark, sf_dir, tmp_path):
     """A replace() (or second compact) winning the race against an
     in-flight compact must NOT be clobbered: the stale compact declines

@@ -12,12 +12,15 @@ import datetime
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmallrealtime02_spark.streaming import jobs as SJ
 from gmallrealtime02_spark.streaming.manifest import ManifestTable, read_output
 from gmallrealtime02_spark.streaming.sinks import upsert_batch
+
+from .conftest import jobs_fired
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -162,7 +165,7 @@ def test_streaming_ods_split_topic_routing(spark, tmp_path):
 
 def test_checkpoint_restart_no_reprocess(spark, tmp_path):
     """Kill the query, add data, restart from the checkpoint: previously
-    processed files are not re-upserted (replaces OffsetManager.scala)."""
+    processed files are not re-committed (replaces OffsetManager.scala)."""
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     _write_batch(spark, src, _rows((1, 1, 5, 1)))
     stream = lambda: (  # noqa: E731
@@ -189,6 +192,106 @@ def test_checkpoint_restart_no_reprocess(spark, tmp_path):
     # mid 1 keeps its pre-restart first-seen row (state recovered from
     # checkpoint — the duplicate arriving after restart is suppressed)
     assert got == {("2024-01-01", 1, "05"), ("2024-01-01", 2, "06")}
+
+
+def _one_file_per_trigger(spark, src):
+    return (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+
+
+def _run_dau_job(spark, src, out, ckpt):
+    q = SJ.start_dau_job(_one_file_per_trigger(spark, src), out, ckpt)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_dau_job_appends_each_key_once(spark, tmp_path):
+    """The DAU sink is a plain append: the stream itself emits each
+    (dt, mid) once, across batches and restarts, and a replayed batch_id
+    is declined by the txn ledger — so every commit is an ``append`` of
+    at most one file per dt, and the table holds one first-seen row per
+    key."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    _write_batch(spark, src, _rows((1, 1, 5, 1), (2, 1, 7, 2), (3, 2, 4, 3)))
+    # later batch: an EARLIER-ts duplicate of (day 1, mid 1), a later
+    # duplicate of (day 1, mid 2), mid 1's next-day repeat, new mids
+    _write_batch(
+        spark, src,
+        _rows((4, 1, 3, 1), (5, 1, 8, 2), (6, 2, 1, 1), (7, 1, 6, 4), (8, 2, 2, 5)),
+    )
+    _run_dau_job(spark, src, out, ckpt)
+    # restart from the checkpoint: duplicates of both days + new mids
+    _write_batch(
+        spark, src,
+        _rows((9, 1, 2, 1), (10, 2, 0, 1), (11, 1, 9, 6), (12, 2, 3, 7)),
+    )
+    _run_dau_job(spark, src, out, ckpt)
+    table = ManifestTable(out)
+    assert table.history()[-1]["added_files"] > 0  # last batch had data
+
+    # replay the last batch: without its commit marker the restart
+    # re-runs it under the same batch_id, as after a crash between the
+    # sink's commit and the checkpoint's
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for n in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, n)):
+            os.remove(os.path.join(commits, n))
+    version = table.current_version()
+    _run_dau_job(spark, src, out, ckpt)
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert table.current_version() == version
+
+    rows = sorted((r.dt, r.mid, r.hr) for r in table.read(spark).collect())
+    assert rows == [
+        ("2024-01-01", 1, "05"),
+        ("2024-01-01", 2, "07"),
+        ("2024-01-01", 4, "06"),
+        ("2024-01-01", 6, "09"),
+        ("2024-01-02", 1, "01"),
+        ("2024-01-02", 3, "04"),
+        ("2024-01-02", 5, "02"),
+        ("2024-01-02", 7, "03"),
+    ]
+    history = table.history()
+    assert {h["op"] for h in history} == {"append"}
+    assert all(h["removed_files"] == 0 for h in history)
+    # each commit adds at most one file per dt, each file of one dt
+    live: set[str] = set()
+    for h in history:
+        added = set(table.files(h["version"])) - live
+        live |= added
+        dts = [pq.read_table(f, columns=["dt"])["dt"].unique().to_pylist() for f in added]
+        assert all(len(d) == 1 for d in dts), dts
+        assert len({d[0] for d in dts}) == len(dts), dts
+
+
+def test_dau_trigger_fires_at_most_two_jobs(spark, tmp_path):
+    """A data trigger into a DAU table that already holds rows runs the
+    stateful plan once, inside its one write job: no bounds job and no
+    read or rewrite of the live files.  The restart gives the trigger a
+    query run (a job group) of its own."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    _write_batch(spark, src, _rows((1, 1, 9, 1), (2, 2, 9, 2)))
+    _run_dau_job(spark, src, out, ckpt)
+    assert ManifestTable(out).read(spark).count() == 2
+    # no row past the max event time seen so far: the watermark stays
+    # put, so no no-data trigger follows the data trigger
+    _write_batch(spark, src, _rows((3, 1, 8, 3), (4, 2, 1, 4), (5, 1, 2, 1)))
+    with jobs_fired(spark) as fired:
+        q = SJ.start_dau_job(_one_file_per_trigger(spark, src), out, ckpt)
+        fired.track(q)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    assert ManifestTable(out).read(spark).count() == 4
+    assert 0 < fired.n <= 2, fired.n
 
 
 def test_streaming_sessionize_gap_merge(spark, tmp_path):
