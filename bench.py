@@ -1091,8 +1091,8 @@ def bench_merge_scaling() -> None:
     16x distinct days (one stat-tight file per day), and at each size
     time a MERGE of a CONSTANT single-day batch (best-of-2).  If the
     stats pruning is real, merge cost tracks the day, not the table —
-    flat in table size — while a raw upsert (sinks.upsert_batch, the
-    legacy rename-swap path) rewrites the whole table every batch.
+    flat in table size — while an unpruned merge rewrites the whole
+    table every batch.
     Also records, at 16x, how many files the merge actually rewrote."""
     import shutil
     import tempfile

@@ -33,10 +33,6 @@ regression), and re-runs stay warm.  Unpersisting a cache a still-lazy
 plan references is always safe — Spark recomputes without reuse — so
 every failure mode here is a recompute, never a wrong answer.
 
-Long-lived sessions that want synchronous release (the instant the
-result is checkpointed, at the cost of one eager job per query) opt in
-with ``SPARK_GRAFT_EAGER_RELEASE=1``.
-
 Query fns that need plan-shape gates split into a lazy
 ``_name_plan() -> (result, caches)`` builder (what the gate inspects)
 plus a registered wrapper that calls ``materialized``.
@@ -45,7 +41,6 @@ plus a registered wrapper that calls ``materialized``.
 from __future__ import annotations
 
 import logging
-import os
 import threading
 
 from pyspark.sql import DataFrame
@@ -109,16 +104,7 @@ def materialized(result: DataFrame, *caches: DataFrame) -> DataFrame:
 
     Queues ``caches`` under the current generation, drains prior-
     generation entries (with semanticHash ownership transfer, see module
-    docstring), and returns ``result`` lazy.  With
-    ``SPARK_GRAFT_EAGER_RELEASE=1``: eagerly localCheckpoints the result
-    and unpersists immediately (round-4 behavior — one extra job)."""
-    if os.environ.get("SPARK_GRAFT_EAGER_RELEASE") == "1":
-        release_pending()
-        try:
-            return result.localCheckpoint(eager=True)
-        finally:
-            for c in caches:
-                c.unpersist()
+    docstring), and returns ``result`` lazy."""
     keep = set()
     for c in caches:
         try:

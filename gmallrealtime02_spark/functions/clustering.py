@@ -18,12 +18,15 @@ ops — no reference analogue; BASELINE.json ``north_star``).
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import ensure_parallelism
+
+log = logging.getLogger(__name__)
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -190,6 +193,8 @@ def _kmeans_memo_key(emb: DataFrame, k: int, iters: int, id_col: str):
             id_col,
         )
     except Exception:
+        # no plan to key on: the fit runs unmemoized
+        log.warning("_kmeans_memo_key: plan canonicalization failed", exc_info=True)
         return None
 
 

@@ -118,7 +118,7 @@ def start_dau_job(
     advances the watermark publishes an empty version):
     ``ManifestTable.maintain()`` is the table's housekeeping — compact
     past its file budget, then vacuum.  Read the output with
-    ``ManifestTable(out_path).read(spark)`` (or ``manifest.read_output``).
+    ``ManifestTable(out_path).read(spark)``.
 
     ``trigger="5 seconds"`` reproduces the reference's micro-batch
     cadence (DauApp.scala:25, W2); None = process-as-available (tests)."""
@@ -391,18 +391,20 @@ def streaming_enrich_orders(
     micro-batch — rather than joined as a plan-level static side: a
     plan-level parquet static side caches its file listing at stream
     start, so dim upserts that rewrite files would crash (stale paths)
-    or go stale.  A fresh read per batch resolves the current snapshot
-    — through the MANIFEST when ``dim_path`` is the ManifestTable root
-    ``streaming_dim_upsert`` now writes (``read_output`` dispatches;
-    reading the raw directory would see staged and retired files) —
-    and still broadcasts (no driver-side collect, unlike the
+    or go stale.  A fresh read per batch resolves the dim
+    ManifestTable's current snapshot (the table ``streaming_dim_upsert``
+    writes) and still broadcasts (no driver-side collect, unlike the
     reference).  The test pins the semantic: a dim row upserted between
-    batches enriches the next batch."""
-    from .manifest import read_output
+    batches enriches the next batch.
+
+    Each batch's enriched rows commit as one ``ManifestTable.append``
+    to ``out_path`` with ``txn=("enrich_orders", batch_id)``: a replayed
+    batch is declined, so the output holds each order once."""
+    dim_table = ManifestTable(dim_path)
+    out_table = ManifestTable(out_path)
 
     def enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        dim = read_output(spark, dim_path)
+        dim = dim_table.read(batch_df.sparkSession)
         out = batch_df.join(
             F.broadcast(dim), batch_df["user_id"] == dim["id"], "left"
         ).select(
@@ -412,7 +414,7 @@ def streaming_enrich_orders(
             dim["name"].alias("user_name"),
             dim["tier"].alias("user_tier"),
         )
-        out.write.mode("append").parquet(out_path)
+        out_table.append(out, txn=("enrich_orders", int(batch_id)))
 
     return (
         order_stream.writeStream.outputMode("append")
@@ -911,17 +913,17 @@ def streaming_ingest_dedup(
     asymmetric probe (``minhash_incremental_survivors``) inside
     ``foreachBatch``.
 
-    Survivors land in ``out_path`` and the corpus parquet PARTITIONED BY
-    the micro-batch id with DYNAMIC partition overwrite: foreachBatch is
-    at-least-once, so a replayed batch REWRITES its own partition
-    instead of re-appending (the earlier revision's plain appends
-    duplicated survivors on any crash between the two writes — and
-    short docs with no signature re-survived every replay).  The corpus
-    read excludes the current batch's own partition, so a replay after
-    a partial corpus write still computes the same survivor set against
-    prior batches only — idempotent under any crash point.  Batch N+1
-    sees batch N's survivors as corpus — the continuously-growing-index
-    semantics a production ingest pipeline runs.  At 100 TB the corpus
+    Survivors, tagged with their micro-batch id (``ingest_batch``),
+    commit as one ``ManifestTable.append`` to ``out_path`` and one to
+    the corpus table, each with ``txn=("ingest_dedup", batch_id)``:
+    foreachBatch is at-least-once, so a replayed batch is declined by
+    whichever table already holds it instead of re-appending.  The
+    corpus read excludes the current batch's own rows, so a replay
+    after a crash between the two commits computes the same survivor
+    set against prior batches only — idempotent under any crash point.
+    Batch N+1 sees batch N's survivors as corpus — the
+    continuously-growing-index semantics a production ingest pipeline
+    runs.  At 100 TB the corpus
     side is the persisted band index (bucketed by (band, bkey)); the
     per-batch "re-read" is a metadata refresh and the probe join prunes
     to matching buckets, so per-batch cost follows the batch, not the
@@ -941,6 +943,9 @@ def streaming_ingest_dedup(
         minhash_lsh_pairs,
     )
 
+    out_table = ManifestTable(out_path)
+    corpus_table = ManifestTable(corpus_path)
+
     def ingest(batch: DataFrame, bid: int) -> None:
         from ..caching import begin_query
 
@@ -956,17 +961,13 @@ def streaming_ingest_dedup(
             .select("doc_id")
         )
         kept = batch.join(self_dup_ids, "doc_id", "left_anti")
-        from pyspark.errors import AnalysisException
-
-        try:
-            # exclude this batch's own partition: a replay after a crash
-            # mid-write must not probe against its own partial output
-            corpus = spark.read.parquet(corpus_path).filter(
+        if corpus_table.current_version() > 0:
+            # exclude this batch's own rows: a replay after a crash
+            # between the two commits must not probe against its own
+            # committed survivors
+            corpus = corpus_table.read(spark).filter(
                 F.col("ingest_batch") != F.lit(int(bid))
             )
-        except AnalysisException:  # first batch: no corpus yet
-            corpus = None
-        if corpus is not None:
             cols = kept.columns
             tagged = (
                 corpus.select(*cols)
@@ -980,13 +981,8 @@ def streaming_ingest_dedup(
         kept = kept.withColumn(
             "ingest_batch", F.lit(int(bid))
         ).localCheckpoint(eager=True)  # pin before double write
-        for path in (out_path, corpus_path):
-            (
-                kept.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(path)
-            )
+        for table in (out_table, corpus_table):
+            table.append(kept, txn=("ingest_dedup", int(bid)))
 
     return (
         new_docs.writeStream.outputMode("append")
@@ -1018,26 +1014,29 @@ def streaming_scd2(
     history of the RETAINED change rows (the standard dim-table
     tradeoff; keep the raw event log for full retrospective rebuilds).
 
-    At 100 TB: the rewrite touches only affected users' rows — with the
-    table partitioned/bucketed by user_id this is a partition-local
-    merge, and per-batch cost follows the batch's user set, not the
-    dimension."""
+    Each batch commits as one ``ManifestTable.merge_delta``: the
+    affected users' rows are deleted and their recomputed history
+    inserted atomically, with ``txn=("scd2", batch_id)`` declining a
+    replayed batch.  Data files are immutable, so a read resolved
+    before a commit keeps its snapshot.
+
+    At 100 TB: record per-file ``user_id`` stats on the table
+    (``ManifestTable(table_path, stats_cols=["user_id"])``) and the
+    merge carries files whose user range misses the batch by name, so
+    per-batch cost follows the batch's user set, not the dimension;
+    without stats every live file is rewritten."""
     from ..operators.windows import scd2_of
 
-    def apply(batch: DataFrame, _bid: int) -> None:
-        spark = batch.sparkSession
-        from pyspark.errors import AnalysisException
+    table = ManifestTable(table_path)
 
+    def apply(batch: DataFrame, bid: int) -> None:
+        spark = batch.sparkSession
         ev = batch.select("user_id", "event_id", "ts", "event_type")
-        try:
-            cur = spark.read.parquet(table_path)
-        except AnalysisException:
-            cur = None
-        if cur is not None:
-            users = ev.select("user_id").distinct()
-            untouched = cur.join(users, "user_id", "left_anti")
+        users = ev.select("user_id").distinct()
+        if table.files():
             replay = (
-                cur.join(users, "user_id", "left_semi")
+                table.read(spark)
+                .join(users, "user_id", "left_semi")
                 .select(
                     "user_id",
                     "event_id",
@@ -1046,10 +1045,9 @@ def streaming_scd2(
                 )
             )
             ev = replay.unionByName(ev).dropDuplicates(["user_id", "event_id"])
-        hist = scd2_of(ev)
-        out = hist if cur is None else untouched.unionByName(hist)
-        out = out.localCheckpoint(eager=True)  # pin before overwriting source
-        out.write.mode("overwrite").parquet(table_path)
+        table.merge_delta(
+            spark, scd2_of(ev), [(["user_id"], users)], txn=("scd2", int(bid))
+        )
 
     return (
         changes.writeStream.outputMode("append")

@@ -87,6 +87,19 @@ def kafka_sink_options(brokers: str, default_topic: str | None = None) -> dict[s
     return opts
 
 
+def to_kafka_frame(df: DataFrame, topic_col: str = "topic", key_col: str | None = None) -> DataFrame:
+    """Shape a DataFrame for the Kafka sink: (topic, key, value=json(*)).
+
+    The per-record ``topic`` column replaces the reference's
+    one-job-per-table fan-out (K2, OdsGmallCanal.scala:46).
+    """
+    value = F.to_json(F.struct(*[c for c in df.columns if c != topic_col]))
+    cols = [F.col(topic_col).alias("topic"), value.alias("value")]
+    if key_col:
+        cols.insert(1, F.col(key_col).cast("string").alias("key"))
+    return df.select(*cols)
+
+
 def write_kafka_stream(
     routed: DataFrame,
     brokers: str,

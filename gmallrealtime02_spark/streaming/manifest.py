@@ -1,8 +1,7 @@
 """Snapshot-isolated parquet table via a versioned manifest — the
 metadata layer raw directory listings cannot give.
 
-``compact_partitions`` (sinks.py) documents its honest limitation: a
-rename-swap over a live directory needs exclusive access, because a
+A rename-swap over a live directory needs exclusive access, because a
 directory listing is not a transaction.  This module is the design-level
 fix, the Iceberg/Delta idea at 1% of the size:
 
@@ -21,8 +20,8 @@ fix, the Iceberg/Delta idea at 1% of the size:
   untouched, no recovery step, no marker replay;
 - :meth:`ManifestTable.upsert` is the keyed MERGE (Delta-style
   touched-files-only copy-on-write), making this layer the warehouse's
-  DEFAULT sink (``streaming/jobs.py`` routes DAU/dim/ODS through it;
-  ``sinks.py``'s raw-directory protocols remain for plain layouts).
+  ONLY sink: every ``streaming/jobs.py`` output commits through it with
+  a per-app ``txn`` watermark, and is read back through it.
 
 Why this is the 100 TB layout: at scale "the directory" is an object
 store with eventually-consistent listings and no atomic rename of
@@ -250,12 +249,7 @@ def _temporal_cols(schema_json) -> set[str]:
 # bloom-indexed table keep the one-job path.  Conservative: a footer
 # read is ~1 ms local / ~10 ms object store, so 32 files stays well
 # under the fixed cost of one Spark job either way.
-try:
-    _FOOTER_STATS_MAX_FILES = int(
-        os.environ.get("SPARK_GRAFT_FOOTER_STATS_MAX", "32")
-    )
-except ValueError:  # malformed env var must not crash module import
-    _FOOTER_STATS_MAX_FILES = 32
+_FOOTER_STATS_MAX_FILES = 32
 
 
 def _pow2_bits(m: int) -> int:
@@ -1528,9 +1522,8 @@ class ManifestTable:
         """Keyed MERGE: ``df``'s rows win over existing rows with the
         same key (the reference's doc-id overwrite semantic,
         MyEsUtil.scala:87-91 / Phoenix PK upsert) — as ONE atomic
-        manifest commit, replacing the raw-directory rename-swap of
-        ``sinks.upsert_batch`` whose exposure window and
-        exclusive-access contract this layer exists to dissolve.
+        manifest commit — no rename-swap exposure window, no
+        exclusive-access contract.
 
         TOUCHED-FILES-ONLY copy-on-write (the Delta MERGE discipline):
         a live file whose recorded [min, max] for the first
@@ -2038,8 +2031,8 @@ class ManifestTable:
     ) -> dict | None:
         """Rewrite the live file set into ceil(bytes/target) files and
         publish the swap as one manifest commit — READERS NEED NO
-        COORDINATION (the compact_partitions exclusive-access contract
-        dissolves at this layer): a reader on vN keeps reading vN's
+        COORDINATION (no exclusive access, unlike a rename-swap over a
+        raw directory): a reader on vN keeps reading vN's
         immutable files; the rewrite only retires them from v(N+1).
         Returns the new manifest, or None if under-fragmented.
 
@@ -2475,26 +2468,14 @@ class ManifestTable:
         return removed
 
 
-def read_output(spark: SparkSession, path: str) -> DataFrame:
-    """Read a sink output directory whichever layout it uses: a
-    ManifestTable root (has ``_manifests``) resolves through the current
-    snapshot; anything else is a raw parquet directory.  The one reader
-    call sites need while the warehouse's sinks are manifest-backed but
-    ad-hoc job outputs remain plain parquet."""
-    if os.path.isdir(os.path.join(path, "_manifests")):
-        return ManifestTable(path).read(spark)
-    return spark.read.parquet(path)
-
-
 def make_manifest_upsert_sink(
     table: ManifestTable, keys: list[str], app_id: str = "stream"
 ):
     """foreachBatch sink: keyed MERGE per micro-batch through
     :meth:`ManifestTable.upsert` — one atomic manifest commit per batch,
     touched-files-only rewrite, ``txn=(app_id, batch_id)`` idempotence
-    against checkpoint replay.  The manifest-backed replacement for
-    ``sinks.make_upsert_sink`` (K5 dims): same call-site contract, none of
-    the rename-swap exposure window or exclusive-access requirement."""
+    against checkpoint replay — the K5 dim sink, with no rename-swap
+    exposure window or exclusive-access requirement."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from ..caching import begin_query
@@ -2514,8 +2495,8 @@ def make_manifest_append_sink(
 ):
     """foreachBatch sink: each micro-batch commits ONE manifest version,
     so downstream readers see exact batch boundaries, never a torn
-    batch — the atomic-visibility guarantee the raw append sink
-    (``make_append_sink``) cannot give over a plain directory.
+    batch — the atomic-visibility guarantee a raw parquet append cannot
+    give over a plain directory.
 
     EXACTLY-ONCE table contents: foreachBatch is at-least-once (a
     post-commit pre-checkpoint crash replays the batch), so each commit

@@ -91,17 +91,6 @@ def test_registry_wrapper_marks_query_boundary(spark, sf_dir):
     assert caching._GEN > gen_before
 
 
-def test_eager_release_opt_in(spark, monkeypatch):
-    release_pending()
-    monkeypatch.setenv("SPARK_GRAFT_EAGER_RELEASE", "1")
-    cache = spark.range(50).persist()
-    result = materialized(cache.select(F.count("*").alias("n")), cache)
-    # eager path: checkpointed result, cache released immediately
-    assert not caching._PENDING
-    assert not _is_cached(cache)
-    assert result.collect()[0][0] == 50
-
-
 def test_release_pending_survives_stopped_caches(spark):
     release_pending()
     cache = spark.range(10).persist()
@@ -216,6 +205,28 @@ def test_kmeans_memo_key_is_full_plan_not_hash(spark, sf_dir):
     assert k1 is not None
     assert isinstance(k1[1], str) and "\n" in k1[1]  # a plan tree, not a hash
     assert k1 == k2  # canonicalization unifies trivially-rewritten plans
+
+
+class _Planless:
+    """A frame whose plan cannot be canonicalized."""
+
+    @property
+    def _jdf(self):
+        raise RuntimeError("no plan")
+
+
+def test_kmeans_memo_key_failure_is_logged(caplog):
+    """A memo key that cannot be built logs a WARNING with the exception
+    attached; the fit then runs without the memo (key None)."""
+    from gmallrealtime02_spark.functions import clustering as CL
+
+    caplog.set_level(logging.WARNING, logger=CL.__name__)
+    assert CL._kmeans_memo_key(_Planless(), 4, 2, "vec_id") is None
+    logged = [r for r in caplog.records if r.name == CL.__name__]
+    assert [r.getMessage() for r in logged] == [
+        "_kmeans_memo_key: plan canonicalization failed"
+    ]
+    assert all(r.levelno == logging.WARNING and r.exc_info for r in logged)
 
 
 def test_caching_protocol_is_thread_safe(spark):

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from gmallrealtime02_spark.streaming import jobs as SJ
 from gmallrealtime02_spark.streaming.manifest import ManifestTable
-from gmallrealtime02_spark.streaming.sinks import upsert_batch
 
 
 def _write_envelopes(spark, path, envelopes):
@@ -78,7 +77,7 @@ def test_e2e_ods_dim_dwd_dws(spark, tmp_path):
         F.get_json_object("value", "$.id").cast("long").alias("id"),
         F.get_json_object("value", "$.name").alias("name"),
     )
-    upsert_batch(spark, prov, dim_path, ["id"])
+    ManifestTable(dim_path).upsert(spark, prov, ["id"])
 
     # ---- DWD layer: order_info enriched against the dim, streaming, with
     # the per-batch snapshot refresh (foreachBatch re-read) ----
@@ -100,7 +99,7 @@ def test_e2e_ods_dim_dwd_dws(spark, tmp_path):
     )
 
     def enrich(batch_df, batch_id):
-        dim = batch_df.sparkSession.read.parquet(dim_path)
+        dim = ManifestTable(dim_path).read(batch_df.sparkSession)
         out = batch_df.join(
             F.broadcast(dim), batch_df["province_id"] == dim["id"], "left"
         ).select(

@@ -142,9 +142,9 @@ def test_http_to_dau_full_chain(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    from gmallrealtime02_spark.streaming.manifest import read_output
+    from gmallrealtime02_spark.streaming.manifest import ManifestTable
 
-    got = {(r.dt, r.mid) for r in read_output(spark, out).collect()}
+    got = {(r.dt, r.mid) for r in ManifestTable(out).read(spark).collect()}
     assert got == {
         ("2024-01-01", "mid_a"),
         ("2024-01-01", "mid_b"),

@@ -18,9 +18,9 @@ from gmallrealtime02_spark.streaming.kafka import (
     kafka_source_options,
     project_kafka_frame,
     read_kafka_stream,
+    to_kafka_frame,
     write_kafka_stream,
 )
-from gmallrealtime02_spark.streaming.sinks import to_kafka_frame
 
 KAFKA_SCHEMA = T.StructType(
     [

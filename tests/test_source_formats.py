@@ -123,41 +123,3 @@ def test_ingest_lands_as_partitioned_parquet(spark, sf_dir, tmp_path):
         "PartitionFilters:"
     )[1].split("]")[0], plan
 
-
-def test_compact_partitions_merges_micro_batch_files(spark, sf_dir, tmp_path):
-    """compact_partitions: a dt-partitioned sink dir fragmented by many
-    micro-batch appends compacts to size-targeted file counts per
-    partition, preserves every row and the partition column, and leaves
-    under-fragmented partitions untouched."""
-    from gmallrealtime02_spark.sources.tables import load_table
-    from gmallrealtime02_spark.streaming.sinks import (
-        compact_partitions,
-        make_append_sink,
-    )
-    import pyspark.sql.functions as F
-
-    path = str(tmp_path / "olap")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .limit(2000)
-        .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-    )
-    sink = make_append_sink(path, partition_by=["dt"])
-    # 6 micro-batches -> every dt partition holds ~6 small files
-    for epoch in range(6):
-        sink(events.filter(F.col("event_id") % 6 == epoch), epoch)
-    before = spark.read.parquet(path)
-    cols_before = set(before.columns)
-    # materialize BEFORE compacting — the lazy plan pins the old file list
-    ids_before = sorted(r.event_id for r in before.select("event_id").collect())
-    compacted = compact_partitions(
-        spark, path, partition_by=["dt"], target_bytes=1 << 30
-    )
-    assert compacted, "fragmented partitions should compact"
-    for rel, (n_in, n_out) in compacted.items():
-        assert n_out < n_in, (rel, n_in, n_out)
-        assert n_out == 1  # 1 GiB target at this size -> single file
-    after = spark.read.parquet(path)
-    ids_after = sorted(r.event_id for r in after.select("event_id").collect())
-    assert ids_after == ids_before  # row-level identity, not just counts
-    assert set(after.columns) == cols_before

@@ -1,6 +1,6 @@
 """Streaming-semantics tests (SURVEY.md §5.2): dedup across micro-batches,
-stream-stream join completeness, idempotent upsert sink, topic-routed
-splitter, checkpoint restart recovery.
+stream-stream join completeness, txn-idempotent ManifestTable sinks,
+topic-routed splitter, checkpoint restart recovery.
 
 File sources with maxFilesPerTrigger=1 drive deterministic micro-batch
 boundaries; processAllAvailable() makes each run synchronous.
@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmallrealtime02_spark.streaming import jobs as SJ
-from gmallrealtime02_spark.streaming.manifest import ManifestTable, read_output
-from gmallrealtime02_spark.streaming.sinks import upsert_batch
+from gmallrealtime02_spark.streaming.manifest import ManifestTable
 
 from .conftest import jobs_fired
 
@@ -120,18 +119,6 @@ def test_streaming_stream_stream_join(spark, tmp_path):
     assert got == {(100, 1), (101, 1), (102, 2)}
 
 
-def test_upsert_sink_idempotent(spark, tmp_path):
-    tgt = str(tmp_path / "tbl")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    df2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    upsert_batch(spark, df1, tgt, ["id"])
-    upsert_batch(spark, df2, tgt, ["id"])
-    # replay batch 2 (at-least-once delivery) — result must not change
-    upsert_batch(spark, df2, tgt, ["id"])
-    got = {(r.id, r.v) for r in spark.read.parquet(tgt).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-
-
 def test_streaming_ods_split_topic_routing(spark, tmp_path):
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     envelopes = [
@@ -151,7 +138,7 @@ def test_streaming_ods_split_topic_routing(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    result = read_output(spark, out)
+    result = ManifestTable(out).read(spark)
     by_topic = {
         r.topic: r.n
         for r in result.groupBy("topic").agg(F.count("*").alias("n")).collect()
@@ -178,7 +165,7 @@ def test_checkpoint_restart_no_reprocess(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    first = read_output(spark, out).collect()
+    first = ManifestTable(out).read(spark).collect()
     assert {(r.dt, r.mid, r.hr) for r in first} == {("2024-01-01", 1, "05")}
 
     # later file: same (dt, mid) at an EARLIER hour + a new mid
@@ -188,7 +175,7 @@ def test_checkpoint_restart_no_reprocess(spark, tmp_path):
         q2.processAllAvailable()
     finally:
         q2.stop()
-    got = {(r.dt, r.mid, r.hr) for r in read_output(spark, out).collect()}
+    got = {(r.dt, r.mid, r.hr) for r in ManifestTable(out).read(spark).collect()}
     # mid 1 keeps its pre-restart first-seen row (state recovered from
     # checkpoint — the duplicate arriving after restart is suppressed)
     assert got == {("2024-01-01", 1, "05"), ("2024-01-01", 2, "06")}
@@ -439,10 +426,10 @@ def test_stream_static_join_refreshes_dim_per_batch(spark, tmp_path):
     t0 = datetime(2024, 1, 1)
 
     # initial dim: only user 1 known
-    upsert_batch(
+    dim = ManifestTable(dim_path)
+    dim.upsert(
         spark,
         spark.createDataFrame([(1, "alice", "vip")], "id long, name string, tier string"),
-        dim_path,
         ["id"],
     )
     _write_batch(
@@ -458,15 +445,15 @@ def test_stream_static_join_refreshes_dim_per_batch(spark, tmp_path):
     try:
         q.processAllAvailable()
         first = {
-            r.order_id: r.user_name for r in spark.read.parquet(out_path).collect()
+            r.order_id: r.user_name
+            for r in ManifestTable(out_path).read(spark).collect()
         }
         assert first == {100: "alice", 101: None}  # user 2 unknown yet
 
         # dim upsert BETWEEN batches, then a new order for user 2
-        upsert_batch(
+        dim.upsert(
             spark,
             spark.createDataFrame([(2, "bob", "std")], "id long, name string, tier string"),
-            dim_path,
             ["id"],
         )
         _write_batch(
@@ -474,11 +461,56 @@ def test_stream_static_join_refreshes_dim_per_batch(spark, tmp_path):
         )
         q.processAllAvailable()
         got = {
-            r.order_id: r.user_name for r in spark.read.parquet(out_path).collect()
+            r.order_id: r.user_name
+            for r in ManifestTable(out_path).read(spark).collect()
         }
     finally:
         q.stop()
     assert got == {100: "alice", 101: None, 102: "bob"}  # snapshot refreshed
+
+
+def test_streaming_enrich_orders_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: a fresh-checkpoint replay over the
+    same source and the same output table (the crash-before-checkpoint-
+    commit replay) leaves the enriched output unchanged instead of
+    appending every order a second time."""
+    from datetime import datetime
+
+    src = str(tmp_path / "orders_src")
+    dim_path = str(tmp_path / "dim_user")
+    out_path = str(tmp_path / "enriched")
+    order_schema = "order_id long, user_id long, ts timestamp"
+    ManifestTable(dim_path).upsert(
+        spark,
+        spark.createDataFrame([(1, "alice", "vip")], "id long, name string, tier string"),
+        ["id"],
+    )
+    _write_batch(
+        spark, src, [(100, 1, datetime(2024, 1, 1))],
+        T._parse_datatype_string(order_schema),
+    )
+
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema(order_schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/*")
+        )
+        q = SJ.streaming_enrich_orders(stream, dim_path, out_path, ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def order_ids():
+        return sorted(
+            r.order_id for r in ManifestTable(out_path).read(spark).collect()
+        )
+
+    run(str(tmp_path / "ckpt1"))
+    assert order_ids() == [100]
+    run(str(tmp_path / "ckpt2"))  # full replay of batch 0
+    assert order_ids() == [100]
 
 
 def test_kafka_option_builders():
@@ -801,10 +833,10 @@ def test_streaming_ingest_dedup_grows_corpus(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
+    kept = {r.doc_id for r in ManifestTable(out).read(spark).collect()}
     assert kept == {1, 3, 5}, kept
     # the corpus grew to exactly the survivor set
-    grown = {r.doc_id for r in spark.read.parquet(corpus).collect()}
+    grown = {r.doc_id for r in ManifestTable(corpus).read(spark).collect()}
     assert grown == {1, 3, 5}, grown
 
 
@@ -843,7 +875,7 @@ def test_streaming_ingest_dedup_chain_keeps_component_min(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
+    kept = {r.doc_id for r in ManifestTable(out).read(spark).collect()}
     assert kept == {1}, kept
 
 
@@ -878,14 +910,14 @@ def test_streaming_ingest_dedup_replay_is_idempotent(spark, tmp_path):
 
     run(str(tmp_path / "replay_ckpt1"))
     first = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(out).collect()
+        (r.doc_id, r.text) for r in ManifestTable(out).read(spark).collect()
     )
     run(str(tmp_path / "replay_ckpt2"))  # full replay of batch 0
     again = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(out).collect()
+        (r.doc_id, r.text) for r in ManifestTable(out).read(spark).collect()
     )
     assert first == again == [(1, "alpha beta gamma delta epsilon zeta"), (2, short)]
-    grown = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
+    grown = sorted(r.doc_id for r in ManifestTable(corpus).read(spark).collect())
     assert grown == [1, 2], grown
 
 
@@ -925,7 +957,7 @@ def test_streaming_scd2_rewrites_affected_users(spark, tmp_path):
     got = {
         (r.user_id, r.version, r.state, r.valid_from.hour,
          r.valid_to.hour if r.valid_to else None, r.is_current)
-        for r in spark.read.parquet(tbl).collect()
+        for r in ManifestTable(tbl).read(spark).collect()
     }
     # batch reference over the full concatenated event set
     all_ev = spark.createDataFrame(b1 + b2, EVENT_SCHEMA).select(
@@ -944,6 +976,53 @@ def test_streaming_scd2_rewrites_affected_users(spark, tmp_path):
         (1, 2, "click", 2, 4, False),
         (1, 3, "purchase", 4, None, True),
     ], u1
+
+
+def test_streaming_scd2_snapshot_survives_next_batch(spark, tmp_path):
+    """A read resolved after batch 1 keeps reading batch 1's history
+    after batch 2 commits: each batch publishes a new snapshot instead
+    of overwriting the files an earlier read planned against."""
+    from datetime import datetime
+
+    from gmallrealtime02_spark.operators.windows import scd2_of
+
+    src = str(tmp_path / "scd2_src")
+    tbl = str(tmp_path / "scd2_tbl")
+    ckpt = str(tmp_path / "scd2_ckpt")
+
+    def ev(eid, hour, uid, etype):
+        return (eid, datetime(2024, 1, 1, hour), uid, etype, 1.0)
+
+    def rows(df):
+        return sorted(
+            (r.user_id, r.version, r.state, r.valid_from, r.valid_to)
+            for r in df.collect()
+        )
+
+    cols = ["user_id", "event_id", "ts", "event_type"]
+
+    def batch_history(events):
+        return rows(scd2_of(spark.createDataFrame(events, EVENT_SCHEMA).select(*cols)))
+
+    b1 = [ev(1, 0, 1, "view"), ev(2, 4, 1, "purchase")]
+    b2 = [ev(3, 2, 1, "click")]
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+        .select(*cols)
+    )
+    _write_batch(spark, src, b1)
+    q = SJ.streaming_scd2(stream, tbl, ckpt)
+    try:
+        q.processAllAvailable()
+        after_b1 = ManifestTable(tbl).read(spark)  # planned, not collected
+        _write_batch(spark, src, b2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert rows(after_b1) == batch_history(b1)
+    assert rows(ManifestTable(tbl).read(spark)) == batch_history(b1 + b2)
 
 
 def test_streaming_hll_replay_matches_batch(spark, sf_dir):
@@ -1188,25 +1267,6 @@ def test_streaming_attribution_late_purchase_not_credited_to_future_touch(
         for r in spark.sql("SELECT * FROM attr_late_out").collect()
     }
     assert rows == {2: "direct"}, rows
-
-
-def test_upsert_batch_recovers_from_crash_between_renames(spark, tmp_path):
-    """The rename-swap protocol: if a previous run died after moving the
-    live table to .old but before renaming the new one in, the next
-    upsert must restore .old and proceed — no data loss window."""
-    import os
-
-    path = str(tmp_path / "upsert_tbl")
-    b1 = spark.createDataFrame([(1, "a")], "k long, v string")
-    upsert_batch(spark, b1, path, ["k"])
-    # simulate the crash window: live table moved aside, new never landed
-    os.rename(path, path + ".old")
-    assert not os.path.exists(path)
-    b2 = spark.createDataFrame([(2, "b")], "k long, v string")
-    upsert_batch(spark, b2, path, ["k"])
-    rows = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {1: "a", 2: "b"}, rows
-    assert not os.path.exists(path + ".old")
 
 
 def test_streaming_quality_filter_matches_batch(spark, tmp_path):
