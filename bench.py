@@ -28,6 +28,7 @@ import time
 
 from gmallrealtime02_spark.plans.registry import load_all
 from gmallrealtime02_spark.session import get_spark
+from gmallrealtime02_spark.sources.tables import DEFAULT_SF_DIR
 
 HEADLINE = [
     "dau_hourly",
@@ -44,7 +45,7 @@ HEADLINE = [
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench")
@@ -325,7 +326,7 @@ def bench_streaming() -> None:
         streaming_order_wide,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     sf = float(re.search(r"sf([\d.]+)", sf_dir).group(1))
     spark = get_spark(app_name="bench-streaming")
     work = tempfile.mkdtemp(prefix="bench_stream_")
@@ -545,7 +546,7 @@ def bench_sweep() -> None:
     runs to spot any operator that silently got slower.  Single-shot
     timings carry local-mode noise (±20% on sub-2 s queries); the
     headline best-of-2 in main() stays the comparable number."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-sweep")
@@ -659,7 +660,7 @@ def bench_stress() -> None:
     from gmallrealtime02_spark.functions import text as TX
     from gmallrealtime02_spark.sources.tables import load_table
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     spark = get_spark(app_name="bench-stress")
     out: dict[str, dict] = {}
 
@@ -1006,7 +1007,7 @@ def bench_rollup_scaling() -> None:
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
     from gmallrealtime02_spark.streaming.rollup import ContinuousAggregate
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-rollup-scaling")
@@ -1099,7 +1100,7 @@ def bench_merge_scaling() -> None:
 
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-merge-scaling")
@@ -1184,7 +1185,7 @@ def bench_bloom_scaling() -> None:
 
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-bloom-scaling")
@@ -1275,7 +1276,7 @@ def bench_manifest_scaling() -> None:
 
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-manifest-scaling")
@@ -1375,11 +1376,9 @@ def bench_cdc_scaling() -> None:
     import tempfile
 
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
-    from gmallrealtime02_spark.streaming.propagate import (
-        IncrementalPropagator,
-    )
+    from gmallrealtime02_spark.streaming.propagate import Propagator
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-cdc-scaling")
@@ -1402,9 +1401,7 @@ def bench_cdc_scaling() -> None:
     try:
         bronze = ManifestTable(f"{root}/bronze", stats_cols=["event_id"])
         silver = ManifestTable(f"{root}/silver", stats_cols=["event_id"])
-        p = IncrementalPropagator(
-            bronze, silver, lambda df: df, key_cols=["event_id"]
-        )
+        p = Propagator([bronze], silver, lambda df: df, keys=[["event_id"]])
         n = 0
         for target in (8, 32):
             while n < target:
@@ -1483,7 +1480,7 @@ def bench_ann_scaling() -> None:
 
     from gmallrealtime02_spark.streaming.manifest import ManifestTable
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="bench-ann-scaling")

@@ -798,7 +798,7 @@ def manifest_zorder_prune(spark, sf_dir):
 def manifest_cdc_pipeline(spark, sf_dir):
     """Bronze→silver incremental propagation, hash-proven: events land
     in a bronze ManifestTable over four commits; after each, an
-    ``IncrementalPropagator`` run moves transform(new rows) downstream —
+    one-source ``Propagator`` run moves transform(new rows) downstream —
     the first run a full materialization, every later one reading ONLY
     the version diff (O(new data), the Delta streaming-source idea) and
     committing under the destination's txn ledger (exactly-once across
@@ -812,7 +812,7 @@ def manifest_cdc_pipeline(spark, sf_dir):
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import IncrementalPropagator
+    from ..streaming.propagate import Propagator
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -825,8 +825,8 @@ def manifest_cdc_pipeline(spark, sf_dir):
     try:
         bronze = ManifestTable(f"{root}/bronze")
         silver = ManifestTable(f"{root}/silver")
-        p = IncrementalPropagator(
-            bronze,
+        p = Propagator(
+            [bronze],
             silver,
             lambda df: df.filter(F.col("event_type") == "click").withColumn(
                 "value", F.col("value") * 10.0
@@ -972,19 +972,19 @@ def order_wide_incremental(spark, sf_dir):
 
     Medallion fan-in: bronze orders and bronze lineitem each receive a
     second commit after the initial propagation; the second
-    ``DeltaJoinPropagator.run_once`` must run in INCREMENTAL mode
+    two-source ``Propagator.run_once`` must run in INCREMENTAL mode
     (raised as an error otherwise — O(new data) is part of the
     contract), joining only the version diffs against the other side,
     with both source watermarks recorded in ONE atomic destination
     commit (exactly-once under replay).  The final snapshot matching
     the oracle proves no (order, detail) pair landed twice or was
     missed across the incremental runs
-    (``streaming/propagate.py:DeltaJoinPropagator``)."""
+    (``streaming/propagate.py:Propagator``)."""
     import shutil
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import DeltaJoinPropagator
+    from ..streaming.propagate import Propagator
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -1003,9 +1003,7 @@ def order_wide_incremental(spark, sf_dir):
         bronze_o = ManifestTable(f"{root}/orders")
         bronze_l = ManifestTable(f"{root}/lineitem")
         silver = ManifestTable(f"{root}/order_wide")
-        prop = DeltaJoinPropagator(
-            bronze_o, bronze_l, silver, combine=_order_wide
-        )
+        prop = Propagator([bronze_o, bronze_l], silver, combine=_order_wide)
         bronze_o.append(o_sliced.filter(F.col("slice") == 0).drop("slice"))
         bronze_l.append(l_sliced.filter(F.col("slice") == 0).drop("slice"))
         r1 = prop.run_once(spark)
@@ -1070,12 +1068,12 @@ def order_wide_delete_propagate(spark, sf_dir):
     oracle proves retention deletes no longer recompute the world —
     the round-9 verdict's #1 scale cliff (reference intent: K7 at
     scale, DwsOrderWideApp.scala:129;
-    ``streaming/propagate.py:DeltaJoinPropagator._run_cdc``)."""
+    ``streaming/propagate.py:Propagator._incremental``)."""
     import shutil
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import DeltaJoinPropagator
+    from ..streaming.propagate import Propagator
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -1089,16 +1087,14 @@ def order_wide_delete_propagate(spark, sf_dir):
         silver = ManifestTable(
             f"{root}/order_wide", stats_cols=["order_id"]
         )
-        prop = DeltaJoinPropagator(
-            bronze_o,
-            bronze_l,
+        prop = Propagator(
+            [bronze_o, bronze_l],
             silver,
             combine=_order_wide,
-            left_keys={"o_orderkey": "order_id"},
-            right_keys={
-                "l_orderkey": "order_id",
-                "l_linenumber": "detail_seq",
-            },
+            keys=[
+                {"o_orderkey": "order_id"},
+                {"l_orderkey": "order_id", "l_linenumber": "detail_seq"},
+            ],
         )
         bronze_o.append(orders)
         bronze_l.append(lineitem)
@@ -1160,8 +1156,8 @@ def order_wide_dedup_propagate(spark, sf_dir):
     (A5's unique-per-detail-id), and until round 11 that forced either
     dedup-key-aligned slicing (``order_wide_incremental``'s
     discipline) or a full recompute per run.  Here the propagator OWNS
-    the dedup (``dedup_keys``/``dedup_order`` on
-    ``DeltaJoinPropagator``): lineitem lands in two commits sliced by
+    the dedup (``dedup_keys``/``dedup_order`` on the two-source
+    ``Propagator``): lineitem lands in two commits sliced by
     an ARBITRARY hash of the part key — duplicates of one (orderkey,
     linenumber) deliberately scattered across commits — the second run
     is ENFORCED incremental (new candidates compete against only the
@@ -1173,12 +1169,12 @@ def order_wide_dedup_propagate(spark, sf_dir):
     in one atomic ``merge_delta``.  Hash-matching the complement
     ROW_NUMBER oracle proves no key kept a stale winner, lost a
     runner-up, or survived its own deletion
-    (``streaming/propagate.py:_run_cdc_dedup``)."""
+    (``streaming/propagate.py:Propagator._rederive``)."""
     import shutil
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import DeltaJoinPropagator
+    from ..streaming.propagate import Propagator
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -1209,16 +1205,14 @@ def order_wide_dedup_propagate(spark, sf_dir):
         bronze_o = ManifestTable(f"{root}/orders", stats_cols=["o_orderkey"])
         bronze_l = ManifestTable(f"{root}/lineitem")
         silver = ManifestTable(f"{root}/order_wide", stats_cols=["order_id"])
-        prop = DeltaJoinPropagator(
-            bronze_o,
-            bronze_l,
+        prop = Propagator(
+            [bronze_o, bronze_l],
             silver,
             combine,
-            left_keys={"o_orderkey": "order_id"},
-            right_keys={
-                "l_orderkey": "order_id",
-                "l_linenumber": "detail_seq",
-            },
+            keys=[
+                {"o_orderkey": "order_id"},
+                {"l_orderkey": "order_id", "l_linenumber": "detail_seq"},
+            ],
             dedup_keys={
                 "l_orderkey": "order_id",
                 "l_linenumber": "detail_seq",
@@ -1291,26 +1285,25 @@ def order_wide_3way_delete_propagate(spark, sf_dir):
     listed as unwritten (missing-gap 5).  A gold fact joins bronze
     lineitem ⋈ orders ⋈ customer; then a retention delete erases the
     low third of orders AND a GDPR-style delete erases one whole
-    customer segment; ``MultiJoinPropagator`` must absorb BOTH in one
-    ENFORCED incremental run (raised otherwise) via the telescoping
+    customer segment; a three-source ``Propagator`` must absorb BOTH in
+    one ENFORCED incremental run (raised otherwise) via the telescoping
     multilinear identity — N delta-joins, each with a version-diff
     argument, plus keyed retractions for every source's net-deleted
     rows, all in ONE atomic ``merge_delta`` commit carrying all three
     txn watermarks.  Hash-matches the doubly-complemented one-shot
-    oracle (``streaming/propagate.py:MultiJoinPropagator``)."""
+    oracle (``streaming/propagate.py:Propagator``)."""
     import shutil
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import MultiJoinPropagator
+    from ..streaming.propagate import Propagator
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     customer = load_table(spark, sf_dir, "customer")
     thr = int(orders.agg(F.max("o_orderkey")).first()[0]) // 3
 
-    def combine(dfs):
-        li, o, c = dfs
+    def combine(li, o, c):
         return (
             li.join(o, li.l_orderkey == o.o_orderkey)
             .join(c, o.o_custkey == c.c_custkey)
@@ -1334,7 +1327,7 @@ def order_wide_3way_delete_propagate(spark, sf_dir):
         gold = ManifestTable(
             f"{root}/gold", stats_cols=["order_id", "user_id"]
         )
-        p = MultiJoinPropagator(
+        p = Propagator(
             [b_li, b_o, b_c],
             gold,
             combine=combine,
@@ -1403,7 +1396,7 @@ def medallion_delete_chain(spark, sf_dir):
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import IncrementalPropagator
+    from ..streaming.propagate import Propagator
     from ..streaming.rollup import ContinuousAggregate
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1414,11 +1407,11 @@ def medallion_delete_chain(spark, sf_dir):
     try:
         bronze = ManifestTable(f"{root}/bronze", stats_cols=["event_id"])
         silver = ManifestTable(f"{root}/silver", stats_cols=["event_id"])
-        prop = IncrementalPropagator(
-            bronze,
+        prop = Propagator(
+            [bronze],
             silver,
             lambda df: df.filter(F.col("value") > 0.2),
-            key_cols=["event_id"],
+            keys=[["event_id"]],
         )
         gold = ContinuousAggregate(
             silver,
@@ -1583,10 +1576,7 @@ def medallion_stream_chain(spark, sf_dir):
     import tempfile
 
     from ..streaming.manifest import ManifestTable
-    from ..streaming.propagate import (
-        IncrementalPropagator,
-        make_medallion_sink,
-    )
+    from ..streaming.propagate import Propagator, make_medallion_sink
     from ..streaming.rollup import ContinuousAggregate
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1602,11 +1592,11 @@ def medallion_stream_chain(spark, sf_dir):
         )
         bronze = ManifestTable(f"{root}/bronze", stats_cols=["event_id"])
         silver = ManifestTable(f"{root}/silver", stats_cols=["event_id"])
-        prop = IncrementalPropagator(
-            bronze,
+        prop = Propagator(
+            [bronze],
             silver,
             lambda df: df.filter(F.col("value") > 0.2),
-            key_cols=["event_id"],
+            keys=[["event_id"]],
         )
         gold = ContinuousAggregate(
             silver,

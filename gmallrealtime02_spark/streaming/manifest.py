@@ -1653,7 +1653,7 @@ class ManifestTable:
         removed, then ``inserts``' rows are added — Delta MERGE's
         WHEN MATCHED THEN DELETE + WHEN NOT MATCHED THEN INSERT, the
         destination-side primitive that lets :class:`~.propagate.
-        IncrementalPropagator` absorb an upstream retention delete as a
+        Propagator` absorb an upstream retention delete as a
         keyed retraction instead of a full recompute (reference intent:
         the K7 wide-table sink at scale, DwsOrderWideApp.scala:129).
 

@@ -1,22 +1,46 @@
 """Incremental table-to-table propagation over manifests — the
-bronze→silver layer chaining (Delta's "streaming from a table" idea)
-that completes the table service as a streaming substrate.
+bronze→silver→gold layer chaining (Delta's "streaming from a table"
+idea) that completes the table service as a streaming substrate.
 
-A downstream job over a raw directory must rescan everything per run;
-over a :class:`~.manifest.ManifestTable` the VERSION DIFF enumerates
-exactly the rows added since the last propagated version, so each run
-costs O(new data).  The destination's per-app txn watermark doubles as
-the source-version bookkeeping AND the exactly-once ledger: a replayed
-run (crash after commit, rerun after restart) is declined by the same
-CAS-checked txn rule every manifest sink uses — no separate offset
-store, the Kafka-offset/Redis bookkeeping of the reference collapsed
-into the destination table's own metadata (OffsetManager.scala:14-46).
+One rule, for any number of sources: compute the new output from the
+inputs' DELTA and commit it idempotently.  A downstream job over a raw
+directory must rescan everything per run; over
+:class:`~.manifest.ManifestTable` sources the VERSION DIFF enumerates
+exactly the rows each source added (or, with row-level CDC, added and
+removed) since the last propagated version, so each run costs
+O(new data ⋈ the other sources).  The destination's per-app txn
+watermarks — one ``f"{app_id}.s{i}"`` entry per source — double as the
+source-version bookkeeping AND the exactly-once ledger: all N ride ONE
+atomic destination commit, and a replayed run (crash after commit,
+rerun after restart) is declined by the same CAS-checked txn rule
+every manifest sink uses — no separate offset store, the
+Kafka-offset/Redis bookkeeping of the reference collapsed into the
+destination table's own metadata (OffsetManager.scala:14-46).
 
-``transform`` must be BATCH-LOCAL (row-wise select/filter/explode/
-enrich-against-static): it is applied independently to each version
-diff, so cross-row state would double-count.  Aggregations belong to
+``combine(*dfs)`` gets one DataFrame per source and must be
+MULTILINEAR: distribute over row-union in each argument independently.
+For one source that means BATCH-LOCAL (row-wise select/filter/explode/
+enrich-against-static); for N sources, inner joins composed with
+row-wise projections/filters.  Aggregations belong to
 :class:`~.rollup.ContinuousAggregate` (merged partials); joins against
-other STREAMS belong to Structured Streaming jobs (state store).
+other STREAMS to Structured Streaming jobs (state store).  A keep-best
+dedup OVER the combine is the propagator's own job (``dedup_*``).
+
+Identity (multisets; S_i = A_i − ∇_i is source i's surviving old rows,
+Δ_i its net-added rows, A_i' = S_i + Δ_i its new state): once keys(∇_i)
+are retracted for every i the destination holds combine(S_0..S_{n-1}),
+and the TELESCOPING sum
+
+    combine(A_0'..A_{n-1}') = combine(S_0..S_{n-1})
+        + Σ_i combine(S_0..S_{i-1}, Δ_i, A_{i+1}'..A_{n-1}')
+
+(term i switches argument i from S_i to A_i') makes each run N delta
+terms, each with a version-diff-sized argument, instead of one full
+recompute.  For two sources it is the delta-join identity
+A'⋈B' = A⋈B ∪ ΔA⋈B' ∪ A⋈ΔB (ΔA joins the NEW right side, so (ΔA, ΔB)
+pairs land exactly once).  "Old" arguments are TIME-TRAVEL reads at
+the last-propagated version, available while the vacuum horizon
+retains it.
 """
 
 from __future__ import annotations
@@ -24,14 +48,17 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .manifest import ManifestTable
 
+KeySpec = list[str] | dict[str, str]
 
-def _key_pairs(keys) -> list[tuple[str, str]]:
+
+def _key_pairs(keys: KeySpec) -> list[tuple[str, str]]:
     """Normalize a key spec to [(source_col, dest_col)]: a plain list
-    means the transform keeps the key column names; a {source: dest}
-    mapping handles transforms that rename them."""
+    means the combine keeps the key column names; a {source: dest}
+    mapping handles combines that rename them."""
     if isinstance(keys, dict):
         return list(keys.items())
     return [(k, k) for k in keys]
@@ -43,7 +70,6 @@ def _best_per_key(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame
     by every varying column makes the survivor a pure function of the
     row multiset, partitioning-invariant)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
     return (
@@ -53,598 +79,70 @@ def _best_per_key(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame
     )
 
 
-class IncrementalPropagator:
-    """``key_cols`` (optional) unlocks DELETE-AWARE incrementality: the
-    columns that uniquely identify a source row AND survive
-    ``transform`` (a list when names are unchanged, {source: dest}
-    when renamed).  With it set, an upstream ``delete_where``/
-    ``delete_range``/``upsert`` in the version range propagates as a
-    keyed retraction (``merge_delta`` on the destination) instead of
-    the full recompute — at 100 TB a routine bronze retention pass
-    then costs O(files it touched) downstream, not O(silver).
-    compact/replace/restore still take the honest full fallback."""
+class Propagator:
+    """Keep ``dest`` equal to ``combine(*sources)`` (optionally
+    keep-best per key) by incremental runs.  ``run_once`` takes the
+    first applicable of four paths:
 
-    def __init__(
-        self,
-        source: ManifestTable,
-        dest: ManifestTable,
-        transform: Callable[[DataFrame], DataFrame],
-        app_id: str = "propagate",
-        key_cols: list[str] | dict[str, str] | None = None,
-        dedup_keys: list[str] | dict[str, str] | None = None,
-        dedup_order: list[str] | None = None,
-    ) -> None:
-        """``dedup_keys`` + ``dedup_order`` (round 11, the single-
-        source form of the keep-best family): the destination becomes
-        the deterministic first-row-per-key over transform(source),
-        ordered by ``dedup_order`` ascending.  ``dedup_keys`` is the
-        {source: dest} spec (list when transform keeps the names);
-        the key must survive ``transform``.  Append ranges compete
-        the in-batch best against the stored winners of the touched
-        keys; delete/upsert ranges re-derive the affected keys from
-        the source filtered to them — suppressed runners-up resurrect
-        when a winner's row dies, keys vanish with their last row."""
-        self.source = source
-        self.dest = dest
-        self.transform = transform
-        self.app_id = app_id
-        self.key_cols = key_cols
-        if (dedup_keys is None) != (dedup_order is None):
-            raise ValueError("dedup_keys and dedup_order go together")
-        self.dedup_pairs = (
-            _key_pairs(dedup_keys) if dedup_keys is not None else None
-        )
-        self.dedup_keys = (
-            [d for _, d in self.dedup_pairs]
-            if self.dedup_pairs is not None
-            else None
-        )
-        self.dedup_order = list(dedup_order) if dedup_order else None
+    - **noop** — no source advanced, or a source is still empty (no
+      schema to combine against: the first run waits for all of them).
+    - **append-only range** (every source's range is pure appends):
+      the telescoping terms over the appended rows, committed as an
+      ``append`` — or, with ``dedup_*``, competed against the STORED
+      winners of exactly the touched keys (keep-min is a semilattice,
+      so best(stored ∪ new) never needs the suppressed history).
+    - **row-level CDC** (a delete/upsert in some range): the same terms
+      over the surviving rows, plus one keyed retraction per source —
+      ONE atomic ``merge_delta``, dest files provably outside the
+      deleted keys carried by name.  With ``dedup_*`` the AFFECTED
+      keys are re-derived instead (a retracted row may have been a
+      winner with suppressed runners-up still live).
+    - **full recompute** otherwise (initial run; compact/replace/
+      restore in a range; history below the vacuum horizon; CDC
+      without the key specs it needs) — committed as a ``replace``
+      PINNED to the captured versions: an unpinned read racing a
+      concurrent source append would include rows beyond the recorded
+      watermarks, duplicated by the next run.
 
-    def _best(self, df: DataFrame) -> DataFrame:
-        if self.dedup_keys is None:
-            return df
-        return _best_per_key(df, self.dedup_keys, self.dedup_order)
+    ``keys[i]`` is source i's unique row key as it survives into the
+    destination (list, or {source: dest} when combine renames).  The
+    CDC path needs it only where the algebra reads it: every source's
+    for N ≥ 2 or without dedup, none for a single source's keep-best
+    (its deleted rows name their dedup keys directly).
 
-    def reflected_version(self) -> int:
-        """Highest source version already propagated (0 = nothing)."""
-        return int(self.dest.manifest().get("txn", {}).get(self.app_id, 0))
-
-    def run_once(self, spark: SparkSession) -> dict:
-        """Propagate everything the source added since the last run.
-        Returns {"mode": "noop" | "incremental" | "full",
-        "source_version": N, "rows" | None}.
-
-        Incremental: transform(version-diff rows) appended as ONE atomic
-        commit carrying ``txn=(app_id, source_version)``.  Any
-        non-append source step in the range (compact rewrote the file
-        set — row-preserving but diff-less; replace/delete changed
-        history) falls back to a FULL recompute committed as a replace
-        under the same txn ledger — honest, never a silent double-count
-        or a lingering deleted row.  Either path declined idempotently
-        on replay."""
-        now = self.source.current_version()
-        since = self.reflected_version()
-        if now == since:
-            return {"mode": "noop", "source_version": now}
-        diff = (
-            self.source.read_appended(spark, since, now) if since else None
-        )
-        if since and diff is not None:
-            out = self.transform(diff)
-            if self.dedup_keys is None:
-                self.dest.append(out, txn=(self.app_id, now))
-                return {"mode": "incremental", "source_version": now}
-            # cand feeds BOTH the touched-key set and the refreshed
-            # winners merge_delta computes — persist it so the best()
-            # window over the batch runs once, not once per consumer
-            cand = self._best(out).persist()
-            try:
-                touched = cand.select(*self.dedup_keys).dropDuplicates(
-                    self.dedup_keys
-                )
-                stored = self.dest.read(spark).join(
-                    touched, self.dedup_keys, "left_semi"
-                )
-                refreshed = self._best(stored.unionByName(cand))
-                self.dest.merge_delta(
-                    spark,
-                    refreshed,
-                    [(self.dedup_keys, touched)],
-                    txn=(self.app_id, now),
-                )
-            finally:
-                cand.unpersist()
-            return {
-                "mode": "incremental",
-                "dedup": True,
-                "source_version": now,
-            }
-        if since and self.dedup_keys is not None:
-            ch = self.source.read_changes(spark, since, now)
-            if ch is not None and {
-                s for s, _ in self.dedup_pairs
-            } <= set(ch[1].columns):
-                from pyspark.sql import functions as F
-
-                net_add, net_del = ch
-                dp = self.dedup_pairs
-                # affected feeds BOTH the retraction key set and (via
-                # src_keys) the re-derivation semi-join inside refreshed
-                # — persist so the net-change derivation runs once
-                affected = (
-                    net_del.select(*[F.col(s).alias(d) for s, d in dp])
-                    .unionByName(
-                        self.transform(net_add).select(*self.dedup_keys)
-                    )
-                    .dropDuplicates(self.dedup_keys)
-                    .persist()
-                )
-                try:
-                    src_keys = affected.select(
-                        *[F.col(d).alias(s) for s, d in dp]
-                    )
-                    refreshed = self._best(
-                        self.transform(
-                            self.source.read(spark, version=now).join(
-                                src_keys, [s for s, _ in dp], "left_semi"
-                            )
-                        )
-                    )
-                    self.dest.merge_delta(
-                        spark,
-                        refreshed,
-                        [(self.dedup_keys, affected)],
-                        txn=(self.app_id, now),
-                    )
-                finally:
-                    affected.unpersist()
-                return {
-                    "mode": "incremental",
-                    "retractions": True,
-                    "dedup": True,
-                    "source_version": now,
-                }
-        if since and self.key_cols is not None and self.dedup_keys is None:
-            # append-only diff unavailable — try row-level CDC: net
-            # added rows propagate as transformed inserts, net deleted
-            # rows as keyed retractions, ONE atomic dest commit
-            ch = self.source.read_changes(spark, since, now)
-            if ch is not None:
-                from pyspark.sql import functions as F
-
-                net_add, net_del = ch
-                pairs = _key_pairs(self.key_cols)
-                del_keys = net_del.select(
-                    *[F.col(s).alias(d) for s, d in pairs]
-                ).dropDuplicates([d for _, d in pairs])
-                self.dest.merge_delta(
-                    spark,
-                    self.transform(net_add),
-                    [([d for _, d in pairs], del_keys)],
-                    txn=(self.app_id, now),
-                )
-                return {
-                    "mode": "incremental",
-                    "retractions": True,
-                    "source_version": now,
-                }
-        # pin the full recompute to the CAPTURED version: an unpinned
-        # read racing a concurrent source append would include rows
-        # beyond `now` while recording txn=now — the next incremental
-        # run would then re-append them (duplicates)
-        out = self._best(
-            self.transform(self.source.read(spark, version=now))
-        )
-        self.dest.replace(out, txn=(self.app_id, now))
-        return {"mode": "full", "source_version": now}
-
-
-class DeltaJoinPropagator:
-    """Incremental propagation for a destination DERIVED FROM TWO
-    manifest sources — the medallion fan-in shape (order_wide: two
-    bronze streams joined into one silver fact) that a single-source
-    :class:`IncrementalPropagator` had to full-recompute every run.
-
-    ``combine(left_df, right_df) -> DataFrame`` must be BILINEAR:
-    distribute over row-union in each argument independently —
-    combine(A1 ∪ A2, B) = combine(A1, B) ∪ combine(A2, B) and
-    symmetrically.  Inner joins composed with row-wise projections/
-    filters qualify; aggregations and cross-batch dedup do not (they
-    belong to ContinuousAggregate / the streaming state store).  Under
-    bilinearity the classic delta-join identity makes each run
-    O(new data ⋈ other side):
-
-        A'⋈B'  =  A⋈B  ∪  ΔA⋈B'  ∪  A⋈ΔB
-
-    (ΔA joins the NEW right side so (ΔA, ΔB) pairs land exactly once;
-    old A joins only ΔB).  Reading "old A" is a TIME-TRAVEL read of the
-    left source at its last-propagated version — available while the
-    vacuum horizon retains it; a non-append commit in either source's
-    range, or history below the horizon, falls back to an honest full
-    recompute committed as a replace.
-
-    Exactly-once: both source watermarks ride ONE atomic destination
-    commit as a txn pair list ([(app.left, va), (app.right, vb)]); a
-    replayed run (both pairs at-or-below) is declined by the same
-    CAS-checked rule every manifest sink uses."""
-
-    def __init__(
-        self,
-        left: ManifestTable,
-        right: ManifestTable,
-        dest: ManifestTable,
-        combine: Callable[[DataFrame, DataFrame], DataFrame],
-        app_id: str = "propagate2",
-        left_keys: list[str] | dict[str, str] | None = None,
-        right_keys: list[str] | dict[str, str] | None = None,
-        dedup_keys: list[str] | dict[str, str] | None = None,
-        dedup_order: list[str] | None = None,
-        dedup_side: str = "right",
-    ) -> None:
-        """``left_keys``/``right_keys`` (optional, both required to
-        take effect) unlock DELETE-AWARE incrementality: the columns
-        that uniquely identify a left/right source row and survive
-        ``combine`` into the destination (list when names are
-        unchanged, {source: dest} when combine renames).  A deletion
-        upstream then retracts exactly the destination rows that
-        source row produced (unique key ⇒ per-output-row provenance),
-        via the extended delta-join identity
-
-            A'⋈B' = (A−∇A)⋈(B−∇B)  ∪  ΔA⋈B'  ∪  (A−∇A)⋈ΔB
-
-        applied as ONE atomic ``merge_delta`` (retract keys(∇A) and
-        keys(∇B), insert the two delta joins).
-
-        ``dedup_keys`` + ``dedup_order`` (round 11 — the
-        NON-BILINEAR combine path) declare that the destination is
-        the deterministic keep-best over combine's rows:
-        dest = first row per ``dedup_keys`` group ordered by
-        ``dedup_order`` ascending (``first_seen_dedup``'s convention).
-        ``combine`` itself must stay bilinear — the PROPAGATOR owns
-        the dedup, which is what makes it incrementalizable: keep-min
-        is a semilattice, so best(stored ∪ new-candidates) needs only
-        the stored winner per key, never the suppressed history.
-        Append-only ranges then run as: delta-join candidates →
-        in-batch best → compete against the stored winners of exactly
-        the touched keys (one keyed ``merge_delta``).  Delete ranges
-        re-derive exactly the AFFECTED keys (winners whose provenance
-        was retracted + keys with new candidates) from a combine whose
-        ``dedup_side`` source is filtered to those keys.
-        ``dedup_side`` names the source that OWNS the dedup keys
-        (each output key value is carried by one row of that side —
-        order_wide's detail id lives in the lineitem side), and
-        ``dedup_keys`` accepts the same {source: dest} spec as the
-        provenance keys, read against that source (a plain list when
-        the names survive unchanged)."""
-        self.left = left
-        self.right = right
-        self.dest = dest
-        self.combine = combine
-        self.app_id = app_id
-        self.left_keys = left_keys
-        self.right_keys = right_keys
-        if (dedup_keys is None) != (dedup_order is None):
-            raise ValueError("dedup_keys and dedup_order go together")
-        if dedup_side not in ("left", "right"):
-            raise ValueError("dedup_side must be 'left' or 'right'")
-        self.dedup_pairs = (
-            _key_pairs(dedup_keys) if dedup_keys is not None else None
-        )
-        self.dedup_keys = (
-            [d for _, d in self.dedup_pairs]
-            if self.dedup_pairs is not None
-            else None
-        )
-        self.dedup_order = list(dedup_order) if dedup_order else None
-        self.dedup_side = dedup_side
-
-    def _best(self, df: DataFrame) -> DataFrame:
-        if self.dedup_keys is None:
-            return df
-        return _best_per_key(df, self.dedup_keys, self.dedup_order)
-
-    def reflected_versions(self) -> tuple[int, int]:
-        """(left, right) source versions already propagated (0 = none)."""
-        txn = self.dest.manifest().get("txn", {})
-        return (
-            int(txn.get(f"{self.app_id}.left", 0)),
-            int(txn.get(f"{self.app_id}.right", 0)),
-        )
-
-    def run_once(self, spark: SparkSession) -> dict:
-        """Propagate everything either source added since the last run.
-        Returns {"mode": "noop" | "incremental" | "full",
-        "left_version": N, "right_version": M}."""
-        la, lb = self.reflected_versions()
-        na = self.left.current_version()
-        nb = self.right.current_version()
-        out_meta = {"left_version": na, "right_version": nb}
-        if (na, nb) == (la, lb) or na == 0 or nb == 0:
-            # nothing new, or one source has no commits yet (no schema
-            # to join against — the first run waits for both sides)
-            return {"mode": "noop", **out_meta}
-        txns = [
-            (f"{self.app_id}.left", na),
-            (f"{self.app_id}.right", nb),
-        ]
-        if la and lb:
-            d_left = self.left.read_appended(spark, la, na)
-            d_right = self.right.read_appended(spark, lb, nb)
-            if d_left is not None and d_right is not None:
-                # ΔA ⋈ B_new covers (ΔA, old B) and (ΔA, ΔB);
-                # A_old ⋈ ΔB covers the rest — no pair twice
-                right_new = self.right.read(spark, version=nb)
-                left_old = self.left.read(spark, version=la)
-                delta = self.combine(d_left, right_new).unionByName(
-                    self.combine(left_old, d_right)
-                )
-                if self.dedup_keys is None:
-                    self.dest.append(delta, txn=txns)
-                    return {"mode": "incremental", **out_meta}
-                # keep-best dedup: new candidates compete against the
-                # STORED winners of exactly the touched keys —
-                # best(stored ∪ new) == best(all-history ∪ new)
-                # because keep-min is a semilattice.  cand (the delta
-                # joins + in-batch best) feeds BOTH the touched-key set
-                # and the refreshed winners — persist so the fact-join
-                # delta computes once, not once per consumer
-                cand = self._best(delta).persist()
-                try:
-                    touched = cand.select(*self.dedup_keys).dropDuplicates(
-                        self.dedup_keys
-                    )
-                    stored = self.dest.read(spark).join(
-                        touched, self.dedup_keys, "left_semi"
-                    )
-                    refreshed = self._best(stored.unionByName(cand))
-                    self.dest.merge_delta(
-                        spark,
-                        refreshed,
-                        [(self.dedup_keys, touched)],
-                        txn=txns,
-                    )
-                finally:
-                    cand.unpersist()
-                return {"mode": "incremental", "dedup": True, **out_meta}
-            if self.left_keys is not None and self.right_keys is not None:
-                res = self._run_cdc(spark, la, lb, na, nb, txns)
-                if res is not None:
-                    return {**res, **out_meta}
-        # initial run, non-append history, or below the vacuum horizon:
-        # full recompute PINNED to the captured versions (an unpinned
-        # read racing a concurrent source append would include rows
-        # beyond the recorded watermarks — duplicated next run)
-        out = self._best(
-            self.combine(
-                self.left.read(spark, version=na),
-                self.right.read(spark, version=nb),
-            )
-        )
-        self.dest.replace(out, txn=txns)
-        return {"mode": "full", **out_meta}
-
-    def _run_cdc(self, spark, la, lb, na, nb, txns) -> dict | None:
-        """Delete-aware incremental step via row-level CDC on both
-        sources; None when either side's net diff is unusable (the
-        caller then full-recomputes).  Derivation (all multisets, join
-        rows partitioned by their originating source rows):
-
-            dest holds A⋈B; retracting keys(∇A) and keys(∇B) leaves
-            (A−∇A)⋈(B−∇B); adding ΔA⋈B' and (A−∇A)⋈ΔB gives
-            (A−∇A)⋈(B−∇B+ΔB) + ΔA⋈B' = (A−∇A+ΔA)⋈B' = A'⋈B'.
-
-        A key deleted and re-added with different content nets into
-        BOTH ∇ and Δ: its old output rows retract, its new row joins
-        B' exactly once via the ΔA term."""
-        from pyspark.sql import functions as F
-
-        chl = self.left.read_changes(spark, la, na)
-        chr_ = self.right.read_changes(spark, lb, nb)
-        if chl is None or chr_ is None:
-            return None
-        if self.dedup_keys is not None:
-            return self._run_cdc_dedup(spark, chl, chr_, la, na, nb, txns)
-        add_l, del_l = chl
-        add_r, del_r = chr_
-        lp = _key_pairs(self.left_keys)
-        rp = _key_pairs(self.right_keys)
-        # old-surviving left = A at its propagated version minus the
-        # net-deleted left keys (time-travel read + keyed anti-join)
-        left_old = self.left.read(spark, version=la).join(
-            del_l.select(*[s for s, _ in lp]).dropDuplicates(
-                [s for s, _ in lp]
-            ),
-            [s for s, _ in lp],
-            "left_anti",
-        )
-        right_new = self.right.read(spark, version=nb)
-        inserts = self.combine(add_l, right_new).unionByName(
-            self.combine(left_old, add_r)
-        )
-        deletes = [
-            (
-                [d for _, d in lp],
-                del_l.select(*[F.col(s).alias(d) for s, d in lp]),
-            ),
-            (
-                [d for _, d in rp],
-                del_r.select(*[F.col(s).alias(d) for s, d in rp]),
-            ),
-        ]
-        self.dest.merge_delta(spark, inserts, deletes, txn=txns)
-        return {"mode": "incremental", "retractions": True}
-
-    def _run_cdc_dedup(
-        self, spark, chl, chr_, la, na, nb, txns
-    ) -> dict | None:
-        """Delete-aware incremental step when the destination is a
-        keep-best dedup over the combine.  A retracted provenance row
-        may have been a key's WINNER with suppressed runners-up still
-        live, so keys cannot simply lose rows — the AFFECTED keys are
-        RE-DERIVED from the current state and swapped in atomically.
-
-        Affected keys come from three places: (1) dedup-side deletes
-        name their keys DIRECTLY (the ``dedup_keys`` {source: dest}
-        spec reads them off the raw deleted rows); (2) other-side
-        deletes mark the stored winners they produced (dest semi-join
-        on that side's surviving provenance columns); (3) the linear
-        identity's delta-join terms name every key with NEW
-        candidates.  Re-derivation combines the ``dedup_side`` source
-        FILTERED to the affected keys (each output key is owned by one
-        row of that side) against the other side in full, then
-        keep-best.  One atomic ``merge_delta``: retract affected keys,
-        insert their re-derived winners — keys whose candidates all
-        died simply vanish.  O(affected keys' candidate rows), never
-        O(dest).  None (→ honest full fallback) when the other side's
-        provenance columns are invisible in the destination or the
-        dedup key spec names columns absent from the dedup-side
-        source."""
-        from pyspark.sql import functions as F
-
-        add_l, del_l = chl
-        add_r, del_r = chr_
-        lp = _key_pairs(self.left_keys)
-        rp = _key_pairs(self.right_keys)
-        dp = self.dedup_pairs
-        side_del = del_r if self.dedup_side == "right" else del_l
-        other_pairs = lp if self.dedup_side == "right" else rp
-        other_del = del_l if self.dedup_side == "right" else del_r
-        dest_cur = self.dest.read(spark)
-        if not {d for _, d in other_pairs} <= set(dest_cur.columns):
-            return None  # other-side provenance invisible in dest
-        if not {s for s, _ in dp} <= set(side_del.columns):
-            return None  # dedup keys not named on the dedup-side source
-        # (1) dedup-side deletes name their keys directly
-        aff_side = side_del.select(*[F.col(s).alias(d) for s, d in dp])
-        # (2) other-side deletes: the stored winners they produced
-        odel_keys = other_del.select(
-            *[F.col(s).alias(d) for s, d in other_pairs]
-        ).dropDuplicates([d for _, d in other_pairs])
-        aff_other = dest_cur.join(
-            odel_keys, [d for _, d in other_pairs], "left_semi"
-        ).select(*self.dedup_keys)
-        # (3) keys with NEW candidates: the delta-join terms
-        left_surv = self.left.read(spark, version=la).join(
-            del_l.select(*[s for s, _ in lp]).dropDuplicates(
-                [s for s, _ in lp]
-            ),
-            [s for s, _ in lp],
-            "left_anti",
-        )
-        right_new = self.right.read(spark, version=nb)
-        cand = self.combine(add_l, right_new).unionByName(
-            self.combine(left_surv, add_r)
-        )
-        # affected feeds BOTH the retraction key set and (via src_keys)
-        # the re-derivation semi-join inside refreshed — persist so the
-        # delta-join candidate derivation behind it computes once
-        affected = (
-            aff_side.unionByName(aff_other)
-            .unionByName(cand.select(*self.dedup_keys))
-            .dropDuplicates(self.dedup_keys)
-            .persist()
-        )
-        try:
-            src_keys = affected.select(
-                *[F.col(d).alias(s) for s, d in dp]
-            )
-            join_cols = [s for s, _ in dp]
-            if self.dedup_side == "right":
-                refreshed = self._best(
-                    self.combine(
-                        self.left.read(spark, version=na),
-                        self.right.read(spark, version=nb).join(
-                            src_keys, join_cols, "left_semi"
-                        ),
-                    )
-                )
-            else:
-                refreshed = self._best(
-                    self.combine(
-                        self.left.read(spark, version=na).join(
-                            src_keys, join_cols, "left_semi"
-                        ),
-                        self.right.read(spark, version=nb),
-                    )
-                )
-            self.dest.merge_delta(
-                spark, refreshed, [(self.dedup_keys, affected)], txn=txns
-            )
-        finally:
-            affected.unpersist()
-        return {"mode": "incremental", "retractions": True, "dedup": True}
-
-
-class MultiJoinPropagator:
-    """Incremental propagation for a destination derived from N ≥ 2
-    manifest sources — the generalization the round-9 verdict listed
-    as unwritten (missing-gap 5: "a gold table joining three-plus
-    bronzes re-derives pairwise or falls back to full recompute").
-
-    ``combine(dfs: list[DataFrame]) -> DataFrame`` must be
-    MULTILINEAR: distribute over row-union in each argument
-    independently (inner joins composed with row-wise projections/
-    filters qualify).  ``keys[i]`` gives source i's unique row key as
-    it survives into the destination (list, or {source: dest} when
-    combine renames) — required for incrementality; without it every
-    non-noop run takes the honest full fallback.  A keep-best dedup
-    OVER the combine is supported through ``dedup_keys``/``dedup_order``/
-    ``dedup_side`` (round 11 — see ``__init__``); other cross-row
-    state (aggregations) still belongs to ContinuousAggregate.
-
-    Identity (all multisets; S_i = A_i − ∇_i is source i's surviving
-    old rows, A_i' = S_i + Δ_i its new state): after retracting
-    keys(∇_i) for every i the destination holds combine(S_1..S_n),
-    and the TELESCOPING sum
-
-        combine(A_1'..A_n') = combine(S_1..S_n)
-            + Σ_i combine(A_1'.., A_{i-1}', Δ_i, S_{i+1},.., S_n)
-
-    (term i switches argument i from S_i to A_i' under
-    multilinearity) makes each run N delta-joins — every term has a
-    version-diff-sized argument to broadcast — instead of one full
-    N-way recompute.  Deletes+inserts land as ONE atomic
-    :meth:`~.manifest.ManifestTable.merge_delta` commit carrying all
-    N txn watermarks."""
+    ``dedup_keys`` + ``dedup_order`` make the destination the
+    deterministic first row per ``dedup_keys`` group ordered by
+    ``dedup_order`` ascending; ``combine`` itself stays multilinear.
+    ``dedup_side`` indexes the source that OWNS the dedup keys (each
+    output key value is carried by one row of it — order_wide's detail
+    id lives in the lineitem side); ``dedup_keys`` is a key spec read
+    against that source."""
 
     def __init__(
         self,
         sources: list[ManifestTable],
         dest: ManifestTable,
-        combine: Callable[[list[DataFrame]], DataFrame],
-        app_id: str = "propagateN",
-        keys: list[list[str] | dict[str, str]] | None = None,
-        dedup_keys: list[str] | dict[str, str] | None = None,
+        combine: Callable[..., DataFrame],
+        app_id: str = "propagate",
+        keys: list[KeySpec] | None = None,
+        dedup_keys: KeySpec | None = None,
         dedup_order: list[str] | None = None,
         dedup_side: int = -1,
     ) -> None:
-        """``dedup_keys`` + ``dedup_order`` + ``dedup_side`` (round 11
-        — closing SURVEY §8j's residual): the destination becomes the
-        deterministic keep-best per key over the (still multilinear)
-        combine, exactly the 2-source semantics of
-        :class:`DeltaJoinPropagator`.  ``dedup_side`` is the INDEX of
-        the source that owns the dedup keys; ``dedup_keys`` is the
-        {source: dest} spec read against that source.  Every
-        incremental run re-derives the AFFECTED keys (dedup-side
-        deletes directly, other sides' deletes via the winners they
-        produced, telescoping delta terms for new candidates) from a
-        combine whose owning source is filtered to those keys."""
-        if len(sources) < 2:
-            raise ValueError("MultiJoinPropagator needs >= 2 sources")
-        if keys is not None and len(keys) != len(sources):
+        n = len(sources)
+        if n == 0:
+            raise ValueError("Propagator needs at least one source")
+        if keys is not None and len(keys) != n:
             raise ValueError("one key spec per source")
+        if (dedup_keys is None) != (dedup_order is None):
+            raise ValueError("dedup_keys and dedup_order go together")
+        if not -n <= dedup_side < n:
+            raise ValueError("dedup_side must index a source")
         self.sources = list(sources)
         self.dest = dest
         self.combine = combine
         self.app_id = app_id
-        self.keys = keys
-        if (dedup_keys is None) != (dedup_order is None):
-            raise ValueError("dedup_keys and dedup_order go together")
-        if dedup_keys is not None and not (
-            0 <= dedup_side < len(sources)
-        ):
-            raise ValueError("dedup_side must index a source")
+        self.keys = [_key_pairs(k) for k in keys] if keys is not None else None
         self.dedup_pairs = (
             _key_pairs(dedup_keys) if dedup_keys is not None else None
         )
@@ -654,7 +152,7 @@ class MultiJoinPropagator:
             else None
         )
         self.dedup_order = list(dedup_order) if dedup_order else None
-        self.dedup_side = dedup_side
+        self.dedup_side = dedup_side % n
 
     def _best(self, df: DataFrame) -> DataFrame:
         if self.dedup_keys is None:
@@ -662,6 +160,7 @@ class MultiJoinPropagator:
         return _best_per_key(df, self.dedup_keys, self.dedup_order)
 
     def reflected_versions(self) -> tuple[int, ...]:
+        """Per-source versions already propagated (0 = nothing)."""
         txn = self.dest.manifest().get("txn", {})
         return tuple(
             int(txn.get(f"{self.app_id}.s{i}", 0))
@@ -669,148 +168,157 @@ class MultiJoinPropagator:
         )
 
     def run_once(self, spark: SparkSession) -> dict:
+        """Propagate everything the sources changed since the last run.
+        Returns {"mode": "noop" | "incremental" | "full", "versions":
+        [v_0..v_{n-1}]}, plus ``"retractions": True`` for a CDC run and
+        ``"dedup": True`` for an incremental keep-best run."""
         olds = self.reflected_versions()
         news = tuple(s.current_version() for s in self.sources)
         meta = {"versions": list(news)}
-        if news == olds or any(v == 0 for v in news):
+        if news == olds or 0 in news:
             return {"mode": "noop", **meta}
-        txns = [
-            (f"{self.app_id}.s{i}", news[i])
-            for i in range(len(self.sources))
-        ]
-        if all(olds) and self.keys is not None:
-            changes = [
-                s.read_changes(spark, lo, hi)
-                for s, lo, hi in zip(self.sources, olds, news)
-            ]
-            if all(ch is not None for ch in changes):
-                from pyspark.sql import functions as F
-
-                n = len(self.sources)
-                pairs = [_key_pairs(k) for k in self.keys]
-                adds = [ch[0] for ch in changes]
-                dels = [ch[1] for ch in changes]
-                surviving = [
-                    self.sources[i]
-                    .read(spark, version=olds[i])
-                    .join(
-                        dels[i]
-                        .select(*[s for s, _ in pairs[i]])
-                        .dropDuplicates([s for s, _ in pairs[i]]),
-                        [s for s, _ in pairs[i]],
-                        "left_anti",
-                    )
-                    for i in range(n)
-                ]
-                new_full = [
-                    self.sources[i].read(spark, version=news[i])
-                    for i in range(n)
-                ]
-                inserts = None
-                for i in range(n):
-                    term = self.combine(
-                        new_full[:i] + [adds[i]] + surviving[i + 1 :]
-                    )
-                    inserts = (
-                        term
-                        if inserts is None
-                        else inserts.unionByName(term)
-                    )
-                if self.dedup_keys is not None:
-                    res = self._merge_dedup(
-                        spark, dels, pairs, inserts, new_full, txns
-                    )
-                    if res is not None:
-                        return {**res, **meta}
-                    # dedup prechecks failed: the plain keyed path
-                    # would be WRONG under keep-best semantics — the
-                    # honest full fallback below re-derives everything
-                else:
-                    deletes = [
-                        (
-                            [d for _, d in pairs[i]],
-                            dels[i].select(
-                                *[F.col(s).alias(d) for s, d in pairs[i]]
-                            ),
-                        )
-                        for i in range(n)
-                    ]
-                    self.dest.merge_delta(
-                        spark, inserts, deletes, txn=txns
-                    )
-                    return {
-                        "mode": "incremental",
-                        "retractions": True,
-                        **meta,
-                    }
+        txns = [(f"{self.app_id}.s{i}", v) for i, v in enumerate(news)]
+        if all(olds):
+            res = self._incremental(spark, olds, news, txns)
+            if res is not None:
+                return {**res, **meta}
         out = self._best(
             self.combine(
-                [
-                    self.sources[i].read(spark, version=news[i])
-                    for i in range(len(self.sources))
-                ]
+                *[s.read(spark, version=v) for s, v in zip(self.sources, news)]
             )
         )
         self.dest.replace(out, txn=txns)
         return {"mode": "full", **meta}
 
-    def _merge_dedup(
-        self, spark, dels, pairs, cand, new_full, txns
-    ) -> dict | None:
-        """Keep-best CDC step, N-source form of
-        :meth:`DeltaJoinPropagator._run_cdc_dedup`: affected keys from
-        (1) the owning side's deletes directly, (2) every other side's
-        deletes via the stored winners they produced, (3) the
-        telescoping delta terms' candidates; re-derive them from a
-        combine whose owning source is filtered to those keys.  None
-        (→ full fallback) when a non-owning side's provenance is
-        invisible in the destination or the dedup spec names columns
-        absent from the owning side's delete rows."""
-        from pyspark.sql import functions as F
+    def _terms(self, spark, old, deltas, news) -> DataFrame:
+        """Σ_i combine(S_0..S_{i-1}, Δ_i, A_{i+1}'..A_{n-1}') — ``old``
+        holds S_0..S_{n-2} (S_{n-1} is never an argument)."""
+        new = [
+            s.read(spark, version=v)
+            for s, v in zip(self.sources[1:], news[1:])
+        ]
+        out = None
+        for i, d in enumerate(deltas):
+            term = self.combine(*old[:i], d, *new[i:])
+            out = term if out is None else out.unionByName(term)
+        return out
 
-        n = len(self.sources)
-        side = self.dedup_side
-        dp = self.dedup_pairs
-        dest_cur = self.dest.read(spark)
-        dcols = set(dest_cur.columns)
-        for i in range(n):
-            if i != side and not {d for _, d in pairs[i]} <= dcols:
-                return None
+    def _incremental(self, spark, olds, news, txns) -> dict | None:
+        """The append-only or CDC step; None → the caller's full
+        recompute."""
+        ranges = list(zip(self.sources, olds, news))
+        appended = [s.read_appended(spark, lo, hi) for s, lo, hi in ranges]
+        if all(d is not None for d in appended):
+            old = [s.read(spark, version=lo) for s, lo, _ in ranges[:-1]]
+            delta = self._terms(spark, old, appended, news)
+            if self.dedup_keys is None:
+                self.dest.append(delta, txn=txns)
+                return {"mode": "incremental"}
+            return self._compete(spark, delta, txns)
+        if self.keys is None and (len(ranges) > 1 or self.dedup_keys is None):
+            return None  # the CDC algebra needs key specs it lacks
+        changes = [s.read_changes(spark, lo, hi) for s, lo, hi in ranges]
+        if any(ch is None for ch in changes):
+            return None
+        adds = [a for a, _ in changes]
+        dels = [d for _, d in changes]
+        old = []  # S_i: old rows minus the net-deleted keys
+        for i, (s, lo, _) in enumerate(ranges[:-1]):
+            cols = [c for c, _ in self.keys[i]]
+            old.append(
+                s.read(spark, version=lo).join(
+                    dels[i].select(*cols).dropDuplicates(cols),
+                    cols,
+                    "left_anti",
+                )
+            )
+        inserts = self._terms(spark, old, adds, news)
+        if self.dedup_keys is not None:
+            return self._rederive(spark, dels, inserts, news, txns)
+        # retracting keys(∇_i) for every i leaves combine(S_0..S_{n-1});
+        # the terms add the rest.  A key deleted and re-added with new
+        # content nets into BOTH ∇ and Δ: its old rows retract, its new
+        # row lands once via its Δ term
+        deletes = [
+            (
+                [d for _, d in kp],
+                dl.select(*[F.col(s).alias(d) for s, d in kp]),
+            )
+            for kp, dl in zip(self.keys, dels)
+        ]
+        self.dest.merge_delta(spark, inserts, deletes, txn=txns)
+        return {"mode": "incremental", "retractions": True}
+
+    def _compete(self, spark, delta, txns) -> dict:
+        """Keep-best append: new candidates compete against the STORED
+        winners of exactly the touched keys."""
+        # cand feeds BOTH the touched-key set and the refreshed winners
+        # merge_delta computes — persist so the delta terms and the
+        # in-batch best() window run once, not once per consumer
+        cand = self._best(delta).persist()
+        try:
+            touched = cand.select(*self.dedup_keys).dropDuplicates(
+                self.dedup_keys
+            )
+            stored = self.dest.read(spark).join(
+                touched, self.dedup_keys, "left_semi"
+            )
+            refreshed = self._best(stored.unionByName(cand))
+            self.dest.merge_delta(
+                spark, refreshed, [(self.dedup_keys, touched)], txn=txns
+            )
+        finally:
+            cand.unpersist()
+        return {"mode": "incremental", "dedup": True}
+
+    def _rederive(self, spark, dels, cand, news, txns) -> dict | None:
+        """Keep-best CDC: re-derive the AFFECTED keys and swap them in
+        with one ``merge_delta`` (retract affected keys, insert their
+        re-derived winners — keys whose candidates all died vanish).
+        Affected keys come from (1) the owning side's deletes directly,
+        (2) every other side's deletes via the stored winners they
+        produced (dest semi-join on that side's provenance columns),
+        (3) the telescoping terms' new candidates.  Re-derivation
+        combines the owning source FILTERED to the affected keys
+        against the others in full, then keep-best: O(affected keys'
+        candidate rows), never O(dest).  None (→ full recompute) when a
+        non-owning side's provenance is invisible in the destination or
+        the dedup spec names columns absent from the owning source."""
+        side, dp, dk = self.dedup_side, self.dedup_pairs, self.dedup_keys
         if not {s for s, _ in dp} <= set(dels[side].columns):
             return None
-        affected = dels[side].select(
-            *[F.col(s).alias(d) for s, d in dp]
-        )
-        for i in range(n):
-            if i == side:
-                continue
-            ikeys = dels[i].select(
-                *[F.col(s).alias(d) for s, d in pairs[i]]
-            ).dropDuplicates([d for _, d in pairs[i]])
+        affected = dels[side].select(*[F.col(s).alias(d) for s, d in dp])
+        others = [i for i in range(len(self.sources)) if i != side]
+        dest_cur = self.dest.read(spark) if others else None
+        for i in others:
+            dcols = [d for _, d in self.keys[i]]
+            if not set(dcols) <= set(dest_cur.columns):
+                return None
+            ikeys = (
+                dels[i]
+                .select(*[F.col(s).alias(d) for s, d in self.keys[i]])
+                .dropDuplicates(dcols)
+            )
             affected = affected.unionByName(
-                dest_cur.join(
-                    ikeys, [d for _, d in pairs[i]], "left_semi"
-                ).select(*self.dedup_keys)
+                dest_cur.join(ikeys, dcols, "left_semi").select(*dk)
             )
         # affected feeds BOTH the retraction key set and (via src_keys)
-        # the re-derivation semi-join — persist so the N telescoping
-        # delta terms behind cand compute once
+        # the re-derivation semi-join — persist so the delta terms
+        # behind cand compute once
         affected = (
-            affected.unionByName(cand.select(*self.dedup_keys))
-            .dropDuplicates(self.dedup_keys)
-            .persist()
+            affected.unionByName(cand.select(*dk)).dropDuplicates(dk).persist()
         )
         try:
-            src_keys = affected.select(
-                *[F.col(d).alias(s) for s, d in dp]
-            )
-            args = list(new_full)
-            args[side] = new_full[side].join(
+            src_keys = affected.select(*[F.col(d).alias(s) for s, d in dp])
+            args = [
+                s.read(spark, version=v) for s, v in zip(self.sources, news)
+            ]
+            args[side] = args[side].join(
                 src_keys, [s for s, _ in dp], "left_semi"
             )
-            refreshed = self._best(self.combine(args))
+            refreshed = self._best(self.combine(*args))
             self.dest.merge_delta(
-                spark, refreshed, [(self.dedup_keys, affected)], txn=txns
+                spark, refreshed, [(dk, affected)], txn=txns
             )
         finally:
             affected.unpersist()

@@ -1,6 +1,8 @@
-"""IncrementalPropagator: bronze→silver manifest chaining — version-diff
-reads, exactly-once txn ledger, full-recompute fallbacks on non-append
-history (compact/delete), and multi-hop medallion composition."""
+"""Propagator: bronze→silver→gold manifest chaining over one, two and
+three sources — version-diff reads, exactly-once txn ledger, row-level
+CDC retractions, keep-best dedup, full-recompute fallbacks on
+non-append history (compact/delete), and multi-hop medallion
+composition."""
 
 from __future__ import annotations
 
@@ -9,7 +11,9 @@ from pyspark.sql import functions as F
 
 from gmallrealtime02_spark.sources import load_table
 from gmallrealtime02_spark.streaming.manifest import ManifestTable
-from gmallrealtime02_spark.streaming.propagate import IncrementalPropagator
+from gmallrealtime02_spark.streaming.propagate import Propagator
+
+from .conftest import jobs_fired
 
 
 def _events(spark, sf_dir, lo, hi):
@@ -33,13 +37,13 @@ def _ids(df):
 def test_incremental_propagation_exactly_once(spark, sf_dir, tmp_path):
     bronze = ManifestTable(str(tmp_path / "bronze"))
     silver = ManifestTable(str(tmp_path / "silver"))
-    p = IncrementalPropagator(bronze, silver, _clicks_x10)
+    p = Propagator([bronze], silver, _clicks_x10)
     bronze.append(_events(spark, sf_dir, 0, 100))
     assert p.run_once(spark)["mode"] == "full"  # first run materializes
     bronze.append(_events(spark, sf_dir, 100, 200))
     bronze.append(_events(spark, sf_dir, 200, 300))
     r = p.run_once(spark)
-    assert r["mode"] == "incremental" and r["source_version"] == 3
+    assert r["mode"] == "incremental" and r["versions"] == [3]
     want = _clicks_x10(_events(spark, sf_dir, 0, 300))
     assert _ids(silver.read(spark)) == _ids(want)
     assert silver.read(spark).agg(F.sum("value")).first()[0] == pytest.approx(
@@ -56,7 +60,7 @@ def test_propagation_full_fallback_on_delete(spark, sf_dir, tmp_path):
     does, under the same txn ledger)."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"))
-    p = IncrementalPropagator(bronze, silver, _clicks_x10)
+    p = Propagator([bronze], silver, _clicks_x10)
     bronze.append(_events(spark, sf_dir, 0, 200))
     p.run_once(spark)
     bronze.delete_range(spark, "event_id", lo=0, hi=99)
@@ -70,7 +74,7 @@ def test_propagation_full_fallback_on_delete(spark, sf_dir, tmp_path):
 def test_propagation_full_fallback_on_compact(spark, sf_dir, tmp_path):
     bronze = ManifestTable(str(tmp_path / "bronze"))
     silver = ManifestTable(str(tmp_path / "silver"))
-    p = IncrementalPropagator(bronze, silver, _clicks_x10)
+    p = Propagator([bronze], silver, _clicks_x10)
     for lo in range(0, 300, 100):
         bronze.append(_events(spark, sf_dir, lo, lo + 100))
     p.run_once(spark)
@@ -96,7 +100,7 @@ def test_medallion_chain_and_rollup_tail(spark, sf_dir, tmp_path):
 
     bronze = ManifestTable(str(tmp_path / "bronze"))
     silver = ManifestTable(str(tmp_path / "silver"))
-    p = IncrementalPropagator(bronze, silver, _clicks_x10)
+    p = Propagator([bronze], silver, _clicks_x10)
     gold = ContinuousAggregate(
         silver,
         str(tmp_path / "gold"),
@@ -126,13 +130,13 @@ def test_replayed_run_declined_by_txn(spark, sf_dir, tmp_path):
     bronze = ManifestTable(str(tmp_path / "bronze"))
     silver = ManifestTable(str(tmp_path / "silver"))
     bronze.append(_events(spark, sf_dir, 0, 100))
-    p1 = IncrementalPropagator(bronze, silver, _clicks_x10)
+    p1 = Propagator([bronze], silver, _clicks_x10)
     p1.run_once(spark)
     v = silver.current_version()
     # a zombie with a stale view of the watermark replays version 1
     silver_stale = ManifestTable(str(tmp_path / "silver"))
     out = _clicks_x10(bronze.read(spark))
-    assert silver_stale.replace(out, txn=("propagate", 1)) is None
+    assert silver_stale.replace(out, txn=("propagate.s0", 1)) is None
     assert silver.current_version() == v
 
 
@@ -143,7 +147,7 @@ def test_full_recompute_is_version_pinned(spark, sf_dir, tmp_path):
     duplicate those rows — the review's exactly-once hole)."""
     bronze = ManifestTable(str(tmp_path / "bronze"))
     silver = ManifestTable(str(tmp_path / "silver"))
-    p = IncrementalPropagator(bronze, silver, _clicks_x10)
+    p = Propagator([bronze], silver, _clicks_x10)
     bronze.append(_events(spark, sf_dir, 0, 100))
     # interleave: a writer appends AFTER run_once captured `now`
     orig_read = bronze.read
@@ -169,9 +173,7 @@ def test_full_recompute_is_version_pinned(spark, sf_dir, tmp_path):
     )
 
 
-# -- DeltaJoinPropagator: two-source fan-in ---------------------------------
-
-from gmallrealtime02_spark.streaming.propagate import DeltaJoinPropagator
+# -- two-source fan-in --------------------------------------------------------
 
 
 def _users(spark, sf_dir, lo, hi):
@@ -197,7 +199,7 @@ def test_delta_join_incremental_matches_one_shot(spark, sf_dir, tmp_path):
     left = ManifestTable(str(tmp_path / "ev"))
     right = ManifestTable(str(tmp_path / "users"))
     dest = ManifestTable(str(tmp_path / "joined"))
-    p = DeltaJoinPropagator(left, right, dest, combine=_join_ev_users)
+    p = Propagator([left, right], dest, combine=_join_ev_users)
     assert p.run_once(spark)["mode"] == "noop"  # both sources empty
     left.append(_events(spark, sf_dir, 0, 400))
     assert p.run_once(spark)["mode"] == "noop"  # right still empty
@@ -222,7 +224,7 @@ def test_delta_join_single_side_advance(spark, sf_dir, tmp_path):
     left = ManifestTable(str(tmp_path / "ev"))
     right = ManifestTable(str(tmp_path / "users"))
     dest = ManifestTable(str(tmp_path / "joined"))
-    p = DeltaJoinPropagator(left, right, dest, combine=_join_ev_users)
+    p = Propagator([left, right], dest, combine=_join_ev_users)
     left.append(_events(spark, sf_dir, 0, 300))
     right.append(_users(spark, sf_dir, 0, 200))
     p.run_once(spark)
@@ -242,7 +244,7 @@ def test_delta_join_full_fallback_on_non_append(spark, sf_dir, tmp_path):
     left = ManifestTable(str(tmp_path / "ev"))
     right = ManifestTable(str(tmp_path / "users"))
     dest = ManifestTable(str(tmp_path / "joined"))
-    p = DeltaJoinPropagator(left, right, dest, combine=_join_ev_users)
+    p = Propagator([left, right], dest, combine=_join_ev_users)
     left.append(_events(spark, sf_dir, 0, 200))
     left.append(_events(spark, sf_dir, 200, 400))
     right.append(_users(spark, sf_dir, 0, 150))
@@ -265,7 +267,7 @@ def test_delta_join_vacuumed_time_travel_falls_back(spark, sf_dir, tmp_path):
     left = ManifestTable(str(tmp_path / "ev"))
     right = ManifestTable(str(tmp_path / "users"))
     dest = ManifestTable(str(tmp_path / "joined"))
-    p = DeltaJoinPropagator(left, right, dest, combine=_join_ev_users)
+    p = Propagator([left, right], dest, combine=_join_ev_users)
     left.append(_events(spark, sf_dir, 0, 200))
     right.append(_users(spark, sf_dir, 0, 150))
     p.run_once(spark)
@@ -298,13 +300,13 @@ def test_multi_txn_pair_atomic_watermarks(spark, sf_dir, tmp_path):
 
 
 def test_delete_propagates_as_keyed_retraction(spark, sf_dir, tmp_path):
-    """With key_cols set, an upstream delete_where propagates as a
+    """With keys set, an upstream delete_where propagates as a
     keyed retraction — mode incremental with retractions, NOT the full
     recompute — and rows removed upstream never survive downstream."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    p = IncrementalPropagator(
-        bronze, silver, _clicks_x10, key_cols=["event_id"]
+    p = Propagator(
+        [bronze], silver, _clicks_x10, keys=[["event_id"]]
     )
     bronze.append(_events(spark, sf_dir, 0, 200))
     assert p.run_once(spark)["mode"] == "full"
@@ -328,8 +330,8 @@ def test_delete_and_append_in_one_range(spark, sf_dir, tmp_path):
     of pre-range rows retract, new rows land — all in one commit."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    p = IncrementalPropagator(
-        bronze, silver, _clicks_x10, key_cols=["event_id"]
+    p = Propagator(
+        [bronze], silver, _clicks_x10, keys=[["event_id"]]
     )
     bronze.append(_events(spark, sf_dir, 0, 100))
     p.run_once(spark)
@@ -347,8 +349,8 @@ def test_retraction_touches_only_pruned_dest_files(spark, sf_dir, tmp_path):
     key — the rest are carried BY NAME (metadata only)."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    p = IncrementalPropagator(
-        bronze, silver, lambda df: df, key_cols=["event_id"]
+    p = Propagator(
+        [bronze], silver, lambda df: df, keys=[["event_id"]]
     )
     for lo in range(0, 400, 100):  # four stat-tight silver files
         bronze.append(_events(spark, sf_dir, lo, lo + 100).coalesce(1))
@@ -365,13 +367,13 @@ def test_retraction_touches_only_pruned_dest_files(spark, sf_dir, tmp_path):
 
 
 def test_compact_and_vacuum_still_fall_back(spark, sf_dir, tmp_path):
-    """key_cols does not change the honest fallbacks: compact in range
+    """keys do not change the honest fallbacks: compact in range
     (row-preserving but whole-file churn) and a vacuumed rewrite file
     both force the full recompute."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"))
-    p = IncrementalPropagator(
-        bronze, silver, _clicks_x10, key_cols=["event_id"]
+    p = Propagator(
+        [bronze], silver, _clicks_x10, keys=[["event_id"]]
     )
     for lo in range(0, 300, 100):
         bronze.append(_events(spark, sf_dir, lo, lo + 100))
@@ -389,7 +391,7 @@ def test_compact_and_vacuum_still_fall_back(spark, sf_dir, tmp_path):
 
 
 def test_renamed_keys_mapping(spark, sf_dir, tmp_path):
-    """key_cols as {source: dest} handles transforms that rename the
+    """A {source: dest} key spec handles transforms that rename the
     key column."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["eid"])
@@ -399,8 +401,8 @@ def test_renamed_keys_mapping(spark, sf_dir, tmp_path):
             F.col("event_id").alias("eid"), "event_type", "value"
         )
 
-    p = IncrementalPropagator(
-        bronze, silver, renames, key_cols={"event_id": "eid"}
+    p = Propagator(
+        [bronze], silver, renames, keys=[{"event_id": "eid"}]
     )
     bronze.append(_events(spark, sf_dir, 0, 200))
     p.run_once(spark)
@@ -413,20 +415,18 @@ def test_renamed_keys_mapping(spark, sf_dir, tmp_path):
 
 
 def test_delta_join_delete_propagates_retractions(spark, sf_dir, tmp_path):
-    """DeltaJoinPropagator with left/right keys: deleting rows from ONE
+    """A two-source Propagator with keys: deleting rows from ONE
     bronze retracts exactly their join contributions downstream, in
     ENFORCED incremental mode, and the destination matches the
     one-shot join of the post-delete sources."""
     left = ManifestTable(str(tmp_path / "ev"), stats_cols=["event_id"])
     right = ManifestTable(str(tmp_path / "users"))
     dest = ManifestTable(str(tmp_path / "joined"), stats_cols=["event_id"])
-    p = DeltaJoinPropagator(
-        left,
-        right,
+    p = Propagator(
+        [left, right],
         dest,
         combine=_join_ev_users,
-        left_keys=["event_id"],
-        right_keys=["user_id"],
+        keys=[["event_id"], ["user_id"]],
     )
     left.append(_events(spark, sf_dir, 0, 300))
     right.append(_users(spark, sf_dir, 0, 100))
@@ -447,13 +447,11 @@ def test_delta_join_deletes_both_sides_plus_appends(spark, sf_dir, tmp_path):
     left = ManifestTable(str(tmp_path / "ev"), stats_cols=["event_id"])
     right = ManifestTable(str(tmp_path / "users"))
     dest = ManifestTable(str(tmp_path / "joined"), stats_cols=["event_id"])
-    p = DeltaJoinPropagator(
-        left,
-        right,
+    p = Propagator(
+        [left, right],
         dest,
         combine=_join_ev_users,
-        left_keys=["event_id"],
-        right_keys=["user_id"],
+        keys=[["event_id"], ["user_id"]],
     )
     left.append(_events(spark, sf_dir, 0, 200))
     right.append(_users(spark, sf_dir, 0, 60))
@@ -494,9 +492,7 @@ def test_read_changes_net_algebra(spark, sf_dir, tmp_path):
     assert t2.read_changes(spark, 1) is None
 
 
-# -- MultiJoinPropagator: N-source fan-in -----------------------------------
-
-from gmallrealtime02_spark.streaming.propagate import MultiJoinPropagator
+# -- N-source fan-in ----------------------------------------------------------
 
 
 def _typedim(spark, sf_dir, types=None):
@@ -511,8 +507,7 @@ def _typedim(spark, sf_dir, types=None):
     return df
 
 
-def _join3(dfs):
-    ev, users, types = dfs
+def _join3(ev, users, types):
     return (
         ev.join(users, "user_id")
         .join(types, "event_type")
@@ -530,7 +525,7 @@ def test_three_source_telescoping_incremental(spark, sf_dir, tmp_path):
     s_us = ManifestTable(str(tmp_path / "us"))
     s_ty = ManifestTable(str(tmp_path / "ty"))
     dest = ManifestTable(str(tmp_path / "gold"), stats_cols=["event_id"])
-    p = MultiJoinPropagator(
+    p = Propagator(
         [s_ev, s_us, s_ty],
         dest,
         combine=_join3,
@@ -545,11 +540,9 @@ def test_three_source_telescoping_incremental(spark, sf_dir, tmp_path):
     r = p.run_once(spark)
     assert r["mode"] == "incremental"
     want = _join3(
-        [
-            _events(spark, sf_dir, 0, 300),
-            _users(spark, sf_dir, 0, 90),
-            _typedim(spark, sf_dir),
-        ]
+        _events(spark, sf_dir, 0, 300),
+        _users(spark, sf_dir, 0, 90),
+        _typedim(spark, sf_dir),
     )
     assert _ids(dest.read(spark)) == _ids(want)
     assert p.run_once(spark)["mode"] == "noop"
@@ -563,7 +556,7 @@ def test_three_source_deletes_on_every_source(spark, sf_dir, tmp_path):
     s_us = ManifestTable(str(tmp_path / "us"))
     s_ty = ManifestTable(str(tmp_path / "ty"))
     dest = ManifestTable(str(tmp_path / "gold"), stats_cols=["event_id"])
-    p = MultiJoinPropagator(
+    p = Propagator(
         [s_ev, s_us, s_ty],
         dest,
         combine=_join3,
@@ -584,11 +577,9 @@ def test_three_source_deletes_on_every_source(spark, sf_dir, tmp_path):
     r = p.run_once(spark)
     assert r["mode"] == "incremental" and r.get("retractions") is True
     want = _join3(
-        [
-            _events(spark, sf_dir, 50, 350),
-            _users(spark, sf_dir, 0, 70),
-            _typedim(spark, sf_dir, [t for t in all_types if t != dropped]),
-        ]
+        _events(spark, sf_dir, 50, 350),
+        _users(spark, sf_dir, 0, 70),
+        _typedim(spark, sf_dir, [t for t in all_types if t != dropped]),
     )
     assert _ids(dest.read(spark)) == _ids(want)
     # nothing joined to the dropped dim value survives downstream
@@ -599,21 +590,46 @@ def test_three_source_deletes_on_every_source(spark, sf_dir, tmp_path):
     assert p.run_once(spark)["mode"] == "noop"
 
 
+def test_three_source_keyless_appends_incremental(spark, sf_dir, tmp_path):
+    """Key specs are for retractions only: an append-only range over
+    three keyless sources runs the telescoping terms incrementally,
+    and the destination equals the one-shot 3-way join."""
+    s_ev = ManifestTable(str(tmp_path / "ev"))
+    s_us = ManifestTable(str(tmp_path / "us"))
+    s_ty = ManifestTable(str(tmp_path / "ty"))
+    dest = ManifestTable(str(tmp_path / "gold"))
+    p = Propagator([s_ev, s_us, s_ty], dest, combine=_join3)
+    s_ev.append(_events(spark, sf_dir, 0, 200))
+    s_us.append(_users(spark, sf_dir, 0, 60))
+    s_ty.append(_typedim(spark, sf_dir, ["click", "view"]))
+    assert p.run_once(spark)["mode"] == "full"
+    s_ev.append(_events(spark, sf_dir, 200, 300))
+    s_us.append(_users(spark, sf_dir, 60, 90))
+    s_ty.append(_typedim(spark, sf_dir, ["error", "purchase", "signup"]))
+    r = p.run_once(spark)
+    assert r["mode"] == "incremental", r
+    want = _join3(
+        _events(spark, sf_dir, 0, 300),
+        _users(spark, sf_dir, 0, 90),
+        _typedim(spark, sf_dir),
+    )
+    assert _ids(dest.read(spark)) == _ids(want)
+    assert dest.read(spark).count() == want.count()
+    assert p.run_once(spark)["mode"] == "noop"
+
+
 def test_multi_source_fallbacks_and_validation(spark, sf_dir, tmp_path):
     s_ev = ManifestTable(str(tmp_path / "ev"))
     s_us = ManifestTable(str(tmp_path / "us"))
     dest = ManifestTable(str(tmp_path / "gold"))
 
-    def j2(dfs):
-        return _join_ev_users(dfs[0], dfs[1])
-
     with pytest.raises(ValueError):
-        MultiJoinPropagator([s_ev], dest, combine=j2)
+        Propagator([], dest, combine=_join_ev_users)
     with pytest.raises(ValueError):
-        MultiJoinPropagator(
-            [s_ev, s_us], dest, combine=j2, keys=[["event_id"]]
+        Propagator(
+            [s_ev, s_us], dest, combine=_join_ev_users, keys=[["event_id"]]
         )
-    p = MultiJoinPropagator([s_ev, s_us], dest, combine=j2)  # no keys
+    p = Propagator([s_ev, s_us], dest, combine=_join_ev_users)  # no keys
     s_ev.append(_events(spark, sf_dir, 0, 100))
     s_us.append(_users(spark, sf_dir, 0, 50))
     assert p.run_once(spark)["mode"] == "full"
@@ -625,8 +641,8 @@ def test_multi_source_fallbacks_and_validation(spark, sf_dir, tmp_path):
         )
     )
     # compact in range forces full even WITH keys
-    p2 = MultiJoinPropagator(
-        [s_ev, s_us], dest, combine=j2,
+    p2 = Propagator(
+        [s_ev, s_us], dest, combine=_join_ev_users,
         keys=[["event_id"], ["user_id"]], app_id="p2",
     )
     assert p2.run_once(spark)["mode"] == "full"
@@ -649,8 +665,8 @@ def test_net_zero_range_still_advances_watermark(spark, sf_dir, tmp_path):
     ever-growing range."""
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    p = IncrementalPropagator(
-        bronze, silver, lambda df: df, key_cols=["event_id"]
+    p = Propagator(
+        [bronze], silver, lambda df: df, keys=[["event_id"]]
     )
     bronze.append(_events(spark, sf_dir, 0, 100))
     p.run_once(spark)
@@ -658,7 +674,7 @@ def test_net_zero_range_still_advances_watermark(spark, sf_dir, tmp_path):
     bronze.append(_events(spark, sf_dir, 0, 30))  # identical re-add
     r = p.run_once(spark)
     assert r["mode"] == "incremental"
-    assert p.reflected_version() == bronze.current_version()  # advanced
+    assert p.reflected_versions() == (bronze.current_version(),)  # advanced
     assert p.run_once(spark)["mode"] == "noop"
     assert _ids(silver.read(spark)) == _ids(_events(spark, sf_dir, 0, 100))
 
@@ -679,13 +695,11 @@ def _dj_dedup(tmp_path, spark, tag="d"):
             "item", "owner", "price", "uname"
         )
 
-    prop = DeltaJoinPropagator(
-        left,
-        right,
+    prop = Propagator(
+        [left, right],
         dest,
         combine,
-        left_keys={"uid": "owner"},
-        right_keys={"rid": "item"},
+        keys=[{"uid": "owner"}, {"rid": "item"}],
         dedup_keys=["item"],
         dedup_order=["price", "owner", "uname"],
     )
@@ -817,13 +831,11 @@ def test_dedup_requires_expressible_keys(spark, tmp_path):
             "item", "owner", "price", "uname"
         )
 
-    prop = DeltaJoinPropagator(
-        left,
-        right,
+    prop = Propagator(
+        [left, right],
         dest,
         combine,
-        left_keys=["uid"],  # uid does NOT survive combine (-> owner)
-        right_keys=["rid"],
+        keys=[["uid"], ["rid"]],  # uid does NOT survive combine (-> owner)
         dedup_keys=["item"],
         dedup_order=["price", "owner", "uname"],
     )
@@ -867,13 +879,14 @@ def test_dedup_order_wide_without_aligned_slicing(spark, sf_dir, tmp_path):
     bronze_o = ManifestTable(str(tmp_path / "bo"))
     bronze_l = ManifestTable(str(tmp_path / "bl"))
     silver = ManifestTable(str(tmp_path / "sv"))
-    prop = DeltaJoinPropagator(
-        bronze_o,
-        bronze_l,
+    prop = Propagator(
+        [bronze_o, bronze_l],
         silver,
         combine,
-        left_keys={"o_orderkey": "order_id"},
-        right_keys={"l_orderkey": "order_id", "l_linenumber": "detail_seq"},
+        keys=[
+            {"o_orderkey": "order_id"},
+            {"l_orderkey": "order_id", "l_linenumber": "detail_seq"},
+        ],
         dedup_keys=["order_id", "detail_seq"],
         dedup_order=["sku_id", "sku_num", "user_id"],
     )
@@ -914,11 +927,11 @@ def test_medallion_sink_streams_chain_end_to_end(spark, sf_dir, tmp_path):
     events.repartition(3).write.parquet(src_dir)
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    prop = IncrementalPropagator(
-        bronze,
+    prop = Propagator(
+        [bronze],
         silver,
         lambda df: df.filter(F.col("event_id") % 10 != 0),
-        key_cols=["event_id"],
+        keys=[["event_id"]],
     )
     gold = ContinuousAggregate(
         silver,
@@ -976,8 +989,8 @@ def test_medallion_sink_restart_mid_chain_exactly_once(
     events.repartition(3).write.parquet(src_dir)
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    prop = IncrementalPropagator(
-        bronze, silver, lambda df: df, key_cols=["event_id"]
+    prop = Propagator(
+        [bronze], silver, lambda df: df, keys=[["event_id"]]
     )
     gold = ContinuousAggregate(
         silver,
@@ -1051,8 +1064,8 @@ def test_medallion_sink_out_of_band_delete_retracts(spark, sf_dir, tmp_path):
     )
     bronze = ManifestTable(str(tmp_path / "bronze"), stats_cols=["event_id"])
     silver = ManifestTable(str(tmp_path / "silver"), stats_cols=["event_id"])
-    prop = IncrementalPropagator(
-        bronze, silver, lambda df: df, key_cols=["event_id"]
+    prop = Propagator(
+        [bronze], silver, lambda df: df, keys=[["event_id"]]
     )
     gold = ContinuousAggregate(
         silver,
@@ -1111,24 +1124,19 @@ def test_multijoin_dedup_keep_best_three_sources(spark, tmp_path):
     winners; deleting a winner's row on the OWNING side resurrects
     the runner-up; deleting a NON-owning side's row re-derives every
     key whose winner it produced — all enforced incremental."""
-    from gmallrealtime02_spark.streaming.propagate import (
-        MultiJoinPropagator,
-    )
-
     users = ManifestTable(str(tmp_path / "u"))
     items = ManifestTable(str(tmp_path / "i"), stats_cols=["item"])
     cats = ManifestTable(str(tmp_path / "c"))
     dest = ManifestTable(str(tmp_path / "d"))
 
-    def combine(dfs):
-        u, it, c = dfs
+    def combine(u, it, c):
         return (
             it.join(u, it.owner == u.uid)
             .join(c, it.cat == c.cid)
             .select("item", "owner", "price", "uname", "cname")
         )
 
-    prop = MultiJoinPropagator(
+    prop = Propagator(
         [users, items, cats],
         dest,
         combine,
@@ -1201,24 +1209,19 @@ def test_multijoin_dedup_invisible_provenance_full_fallback(
     """A non-owning side whose provenance does not survive combine
     forces the honest full fallback (the plain keyed path would be
     wrong under keep-best) — and stays correct."""
-    from gmallrealtime02_spark.streaming.propagate import (
-        MultiJoinPropagator,
-    )
-
     users = ManifestTable(str(tmp_path / "u2"))
     items = ManifestTable(str(tmp_path / "i2"))
     cats = ManifestTable(str(tmp_path / "c2"))
     dest = ManifestTable(str(tmp_path / "d2"))
 
-    def combine(dfs):
-        u, it, c = dfs
+    def combine(u, it, c):
         return (
             it.join(u, it.owner == u.uid)
             .join(c, it.cat == c.cid)
             .select("item", "price", "uname", "cname")  # no owner col
         )
 
-    prop = MultiJoinPropagator(
+    prop = Propagator(
         [users, items, cats],
         dest,
         combine,
@@ -1250,14 +1253,14 @@ def test_multijoin_dedup_invisible_provenance_full_fallback(
 
 
 def test_single_source_dedup_keep_best(spark, tmp_path):
-    """IncrementalPropagator's keep-best form: duplicate keys split
+    """The one-source keep-best form: duplicate keys split
     across commits compete through the stored winners; a delete of the
     winning row resurrects the suppressed runner-up; a key's last row
     dying removes the key — all enforced incremental."""
     src = ManifestTable(str(tmp_path / "s"), stats_cols=["k"])
     dest = ManifestTable(str(tmp_path / "d"))
-    prop = IncrementalPropagator(
-        src,
+    prop = Propagator(
+        [src],
         dest,
         lambda df: df.selectExpr("k AS key", "v * 10 AS score", "tag"),
         dedup_keys={"k": "key"},
@@ -1302,3 +1305,67 @@ def test_single_source_dedup_keep_best(spark, tmp_path):
     assert r["mode"] == "incremental" and r.get("dedup") is True, r
     assert got() == {(1, 50, "a"), (3, 70, "e")}
     assert prop.run_once(spark)["mode"] == "noop"
+
+
+# -- Spark jobs per incremental run -----------------------------------------
+
+_ITEMS = "rid long, item long, owner long, price double"
+_USERS = "uid long, uname string"
+_DEDUP = dict(dedup_keys=["item"], dedup_order=["price", "owner", "uname"])
+_KEYS = dict(keys=[{"uid": "owner"}, {"rid": "item"}])
+
+# Spark jobs fired by ONE incremental run of the two-source fixture
+# below, per mode.  The two-source propagator class this one replaced
+# fired 3 / 12 / 10 / 15 on the same fixture and session
+# (shuffle_partitions=8); a rise means a new action or a lost persist
+# in the run's plan.
+_JOB_BUDGET = {
+    "append": 3,
+    "dedup_append": 12,
+    "cdc": 10,
+    "dedup_cdc": 15,
+}
+
+
+@pytest.mark.parametrize("mode", sorted(_JOB_BUDGET))
+def test_incremental_run_job_count(spark, tmp_path, mode):
+    left = ManifestTable(str(tmp_path / "l"))
+    right = ManifestTable(str(tmp_path / "r"), stats_cols=["item"])
+    dest = ManifestTable(str(tmp_path / "d"), stats_cols=["item"])
+
+    def combine(ldf, rdf):
+        return rdf.join(ldf, rdf.owner == ldf.uid, "inner").select(
+            "item", "owner", "price", "uname"
+        )
+
+    kw = {
+        "append": {},
+        "dedup_append": _DEDUP,
+        "cdc": _KEYS,
+        "dedup_cdc": {**_KEYS, **_DEDUP},
+    }[mode]
+    prop = Propagator([left, right], dest, combine, **kw)
+    left.append(spark.createDataFrame([(1, "ann"), (2, "bo")], _USERS))
+    right.append(
+        spark.createDataFrame(
+            [(10, 100, 1, 5.0), (11, 101, 2, 8.0), (12, 102, 1, 2.0)], _ITEMS
+        )
+    )
+    assert prop.run_once(spark)["mode"] == "full"
+    if mode == "append":
+        left.append(spark.createDataFrame([(3, "cy")], _USERS))
+        right.append(spark.createDataFrame([(13, 103, 3, 1.0)], _ITEMS))
+    elif mode == "dedup_append":
+        right.append(
+            spark.createDataFrame(
+                [(13, 100, 2, 3.0), (14, 103, 1, 1.0)], _ITEMS
+            )
+        )
+    else:
+        right.delete_where(spark, "rid = 10")
+    with jobs_fired(spark) as fired:
+        r = prop.run_once(spark)
+    assert r["mode"] == "incremental", r
+    assert r.get("dedup", False) == mode.startswith("dedup"), r
+    assert r.get("retractions", False) == mode.endswith("cdc"), r
+    assert fired.n <= _JOB_BUDGET[mode], (mode, fired.n)
