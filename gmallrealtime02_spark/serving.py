@@ -20,6 +20,7 @@ data, not the table.
 from __future__ import annotations
 
 import json
+from collections import Counter
 from datetime import date as _date
 from datetime import timedelta
 
@@ -207,24 +208,21 @@ def stat_groups(spark: SparkSession, sf_dir: str) -> str:
     …]}``).  The reference HARDCODES the values; here they are computed —
     group 1 is the tier bucket distribution, group 2 the segment-class
     distribution, both from the P9 CASE buckets (DimUserInfoApp.scala:
-    55-82 analogue in operators/buckets.py).  One scan, two tiny
-    grouped counts."""
+    55-82 analogue in operators/buckets.py).  One scan and one grouped
+    count over (tier, segment_class); the driver sums its few rows into
+    the two distributions."""
     from .operators.buckets import user_dim
 
-    dim = user_dim(load_table(spark, sf_dir, "customer")).persist()
-    try:
-        tiers = {
-            r["tier"]: r["ct"]
-            for r in dim.groupBy("tier").agg(F.count("*").alias("ct")).collect()
-        }
-        segs = {
-            r["segment_class"]: r["ct"]
-            for r in dim.groupBy("segment_class")
-            .agg(F.count("*").alias("ct"))
-            .collect()
-        }
-    finally:
-        dim.unpersist()
+    tiers: Counter = Counter()
+    segs: Counter = Counter()
+    for r in (
+        user_dim(load_table(spark, sf_dir, "customer"))
+        .groupBy("tier", "segment_class")
+        .count()
+        .collect()
+    ):
+        tiers[r["tier"]] += r["count"]
+        segs[r["segment_class"]] += r["count"]
     return json.dumps(
         {
             "stat": [

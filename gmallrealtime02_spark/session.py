@@ -18,7 +18,10 @@ knob is chosen to also be the right default on a real cluster at 100 TB:
   new spool files to such a listing (``getBatch``), and every
   ``ManifestTable`` read passes its live files the same way.  Cluster
   masters keep Spark's default: there the listing job spreads over
-  executors and does add parallelism.
+  executors and does add parallelism.  Its sibling, the schema-inference
+  job of a parquet read, is avoided at the reads themselves: they pass
+  an explicit schema (``sources.tables.load_table`` builds it from the
+  parquet footer).
 """
 
 from __future__ import annotations

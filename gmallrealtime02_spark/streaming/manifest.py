@@ -47,6 +47,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(RuntimeError):
@@ -640,7 +641,7 @@ class ManifestTable:
                 # stats for the whole commit — no per-file driver loop
                 # (neither rows nor footers) anywhere on the commit path
                 blooms, stats = self._build_file_meta(
-                    df.sparkSession, out, rows_by_file
+                    df.sparkSession, out, rows_by_file, df.schema
                 )
                 for f, bl in blooms.items():
                     if bl:
@@ -791,12 +792,18 @@ class ManifestTable:
     def _build_blooms(
         self, spark: SparkSession, file_names: list[str], rows_by_file: dict
     ) -> dict:
-        """Bloom-only view of :meth:`_build_file_meta` (kept as the
+        """Bloom-only view of :meth:`_build_file_meta` over committed
+        files, read with the manifest's recorded schema (kept as the
         bench/regression surface for ``--bloom-scaling``)."""
-        return self._build_file_meta(spark, file_names, rows_by_file)[0]
+        schema = StructType.fromJson(self.manifest()["schema"])
+        return self._build_file_meta(spark, file_names, rows_by_file, schema)[0]
 
     def _build_file_meta(
-        self, spark: SparkSession, file_names: list[str], rows_by_file: dict
+        self,
+        spark: SparkSession,
+        file_names: list[str],
+        rows_by_file: dict,
+        schema: StructType,
     ) -> tuple[dict, dict]:
         """Per-file Bloom filters AND min/max range stats for a staged
         commit, computed EXECUTOR-SIDE as ONE Spark job — the commit-
@@ -829,13 +836,14 @@ class ManifestTable:
         is what the footer orders by).  Non-atomic column types
         (arrays/structs) get no filter; stats columns whose type the
         manifest cannot encode (see ``_jsonable``) are omitted exactly
-        as the footer path omitted them."""
+        as the footer path omitted them.  ``schema`` is the written
+        frame's schema: the files are read with it, so the build infers
+        nothing (schema inference would cost a Spark job of its own)."""
         import pandas as pd
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         paths = [os.path.join(self.data_dir, f) for f in file_names]
-        schema = spark.read.parquet(paths[0]).schema
         by_name = {f.name: f.dataType for f in schema.fields}
         k = self.bloom_hashes
         sel = [F.input_file_name().alias("__file")]

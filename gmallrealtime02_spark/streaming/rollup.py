@@ -166,8 +166,6 @@ class ContinuousAggregate:
         keep their stored partials verbatim.  Anything else
         (compact/replace, vacuumed history, a pre-round-10 rollup
         without ``__rows__``): one honest full recompute."""
-        import os
-
         now = self.source.current_version()
         since = self.reflected_version()
         if now == since:
@@ -177,10 +175,7 @@ class ContinuousAggregate:
         )
         mode = scanned = None
         if since and new_files and self._stored_has_rows():
-            paths = [
-                os.path.join(self.source.data_dir, f) for f in new_files
-            ]
-            fresh = self._aggregate(spark.read.parquet(*paths))
+            fresh = self._aggregate(self.source.read_appended(spark, since, now))
             merged = self._merge(
                 self.rollup.read(spark).unionByName(fresh)
             )

@@ -11,6 +11,8 @@ from gmallrealtime02_spark.sources import load_table
 from gmallrealtime02_spark.streaming.manifest import ManifestTable
 from gmallrealtime02_spark.streaming.rollup import ContinuousAggregate
 
+from .conftest import jobs_fired
+
 
 def _events(spark, sf_dir, lo, hi):
     return (
@@ -60,6 +62,27 @@ def _got(spark, ca):
         (r.dt, r.event_type): (r.n, round(r.total, 6), r.vmin, r.vmax)
         for r in ca.read(spark).collect()
     }
+
+
+def test_incremental_refresh_reads_with_the_source_schema(spark, tmp_path):
+    """The incremental path reads the appended files with the source
+    manifest's recorded schema: the refresh's jobs are the aggregate's
+    and the rollup commit's, with no schema-inference job among them."""
+    src = ManifestTable(str(tmp_path / "src"))
+    ca = ContinuousAggregate(
+        src, str(tmp_path / "rollup"), group_cols=["k"], aggs={"n": ("count", "*")}
+    )
+    df = spark.range(0, 100, 1, numPartitions=2).selectExpr(
+        "id", "CAST(id % 7 AS STRING) AS k"
+    )
+    src.append(df)
+    ca.refresh(spark)
+    src.append(df)
+    with jobs_fired(spark) as fired:
+        r = ca.refresh(spark)
+    assert r["mode"] == "incremental"
+    assert fired.n == 3
+    assert sum(row.n for row in ca.read(spark).collect()) == 200
 
 
 def test_incremental_refresh_matches_full_recompute(spark, sf_dir, tmp_path):

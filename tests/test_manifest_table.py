@@ -17,6 +17,8 @@ from gmallrealtime02_spark.streaming.manifest import (
     make_manifest_append_sink,
 )
 
+from .conftest import jobs_fired
+
 
 def _ids(df) -> list[int]:
     return sorted(r.event_id for r in df.select("event_id").collect())
@@ -654,6 +656,42 @@ def test_bloom_point_lookup_skips_files(spark, sf_dir, tmp_path):
     got_u = t.read_points(spark, "user_id", [uid])
     want_u = _events(spark, sf_dir, 0, 400).filter(F.col("user_id") == uid)
     assert got_u.count() == want_u.count()  # no bloom for user_id: exact
+
+
+def test_bloom_commit_fires_no_schema_inference_job(spark, tmp_path):
+    """A bloom-indexed commit reads its staged files back with the
+    written frame's schema.  Its jobs are the write plus the file-meta
+    build (a shuffle stage and its collect); reading the schema off a
+    staged file used to add a fourth."""
+    t = ManifestTable(
+        str(tmp_path / "t"), stats_cols=["id"], bloom_cols=["id", "k"]
+    )
+
+    def batch(lo):
+        return spark.range(lo, lo + 100, 1, numPartitions=2).selectExpr(
+            "id", "CAST(id % 7 AS STRING) AS k"
+        )
+
+    t.append(batch(0))
+    with jobs_fired(spark) as fired:
+        t.append(batch(100))
+    assert fired.n == 3
+    m = t.manifest()
+    assert len(m["files"]) == 4
+    for f in m["files"]:
+        assert set(t._bloom_for(f, m["stats"][f])) == {"id", "k"}, f
+    assert t.read_points(spark, "id", [150]).count() == 1
+    # the bloom-only rebuild over committed files (bench.py's
+    # --bloom-scaling surface) reproduces the commit's sidecars
+    import pyarrow.parquet as pq
+
+    rows = {
+        f: pq.ParquetFile(os.path.join(t.data_dir, f)).metadata.num_rows
+        for f in m["files"]
+    }
+    assert t._build_blooms(spark, m["files"], rows) == {
+        f: t._bloom_for(f, m["stats"][f]) for f in m["files"]
+    }
 
 
 def test_bloom_survives_carry_and_upsert(spark, sf_dir, tmp_path):
