@@ -414,26 +414,6 @@ def semdedup_pairs(
         v.unpersist()
 
 
-def semantic_dedup(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Full SemDeDup assignment: cluster-pruned near-dup pairs →
-    connected components → (vec_id, canonical_id) for every vector in a
-    duplicate group (singletons omitted, as in ``dedup_canonical``)."""
-    from .similarity import connected_components
-
-    pairs = semdedup_pairs(emb, k, iters, threshold, id_col).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    return connected_components(pairs).select(
-        F.col("doc_id").alias(id_col), F.col("component").alias("canonical_id")
-    )
-
-
 # --- Product quantization -------------------------------------------------
 
 

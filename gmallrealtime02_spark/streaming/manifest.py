@@ -18,10 +18,18 @@ fix, the Iceberg/Delta idea at 1% of the size:
   invisible until its manifest lands, and a crash mid-commit leaves
   nothing but orphan data files for ``vacuum`` — the live table is
   untouched, no recovery step, no marker replay;
-- :meth:`ManifestTable.upsert` is the keyed MERGE (Delta-style
-  touched-files-only copy-on-write), making this layer the warehouse's
-  ONLY sink: every ``streaming/jobs.py`` output commits through it with
-  a per-app ``txn`` watermark, and is read back through it.
+- ONE commit loop, :meth:`ManifestTable._commit`, publishes every
+  version and owns the per-app ``txn`` idempotence ledger: it carries
+  the watermarks into every next state and declines a replayed ``txn``,
+  so an at-least-once sink becomes exactly-once table contents;
+- ONE copy-on-write rewrite loop, :meth:`ManifestTable._rewrite`
+  (snapshot → touched files → rewrite → CAS, restart when the table
+  moved), is the body of the keyed MERGE :meth:`ManifestTable.upsert`,
+  the CDC :meth:`ManifestTable.merge_delta` and both deletes
+  (Delta-style touched-files-only copy-on-write).  That makes this
+  layer the warehouse's ONLY sink: every ``streaming/jobs.py`` output
+  commits through it with a per-app ``txn`` watermark, and is read back
+  through it.
 
 Why this is the 100 TB layout: at scale "the directory" is an object
 store with eventually-consistent listings and no atomic rename of
@@ -197,21 +205,32 @@ def _delta_of(base: dict, nxt: dict) -> dict:
     return delta
 
 
+def _txn_pairs(txn) -> list[tuple]:
+    """An idempotence watermark ``txn`` — one ``(app_id, version)`` pair
+    or a list of them (a multi-source job records every source's
+    watermark in ONE atomic commit) — as a list of pairs."""
+    return [txn] if isinstance(txn[0], str) else [tuple(t) for t in txn]
+
+
+def _txn_replayed(txns: dict, txn) -> bool:
+    """True when EVERY pair of ``txn`` is at-or-below its recorded
+    watermark in ``txns``: the whole commit is a replay."""
+    return all(
+        txns.get(a) is not None and int(v) <= int(txns[a])
+        for a, v in _txn_pairs(txn)
+    )
+
+
 def _txn_advance(txns: dict, txn) -> dict | None:
-    """Apply idempotence watermark(s) ``txn`` — one ``(app_id, version)``
-    pair or a list of them (a multi-source job records every source's
-    watermark in ONE atomic commit) — to a copy of ``txns``.  Returns
-    None when EVERY pair is at-or-below its recorded watermark: the
-    whole commit is a replay and must decline.  A partially-advanced
-    set (one source moved, another is re-recorded at its same value)
-    commits and re-records each app at the max."""
-    pairs = [txn] if isinstance(txn[0], str) else [tuple(t) for t in txn]
-    if all(
-        txns.get(a) is not None and int(v) <= int(txns[a]) for a, v in pairs
-    ):
+    """Apply idempotence watermark(s) ``txn`` to a copy of ``txns``.
+    Returns None on a replay (:func:`_txn_replayed`): the commit must
+    decline.  A partially-advanced set (one source moved, another is
+    re-recorded at its same value) commits and re-records each app at
+    the max.  Only :meth:`ManifestTable._commit` calls this."""
+    if _txn_replayed(txns, txn):
         return None
     out = dict(txns)
-    for a, v in pairs:
+    for a, v in _txn_pairs(txn):
         prev = out.get(a)
         out[a] = int(v) if prev is None else max(int(v), int(prev))
     return out
@@ -1343,15 +1362,25 @@ class ManifestTable:
 
     # -- the commit protocol -------------------------------------------------
 
-    def _commit(self, make_manifest, max_retries: int = 16) -> dict | None:
+    def _commit(
+        self, make_manifest, txn=None, max_retries: int = 16
+    ) -> dict | None:
         """Optimistic CAS loop: build the next state against the current
         snapshot, publish its DELTA via exclusive hard-link create,
         rebase and retry on conflict.  ``make_manifest(base: dict) ->
         dict | None`` must be a pure function of the base snapshot
         (append recomputes its file union, compact re-reads the new
-        live set, ...); returning None declines the commit
-        (idempotent-txn replay) — checked against the freshest base
-        INSIDE the loop, so the decision is race-safe.
+        live set, ...) that builds files, stats, schema and op;
+        returning None declines the commit.
+
+        The txn LEDGER lives here and nowhere else: every next state
+        carries the base's ``txn`` watermarks (no commit — replace,
+        restore, compact — ever resets sink idempotence), and
+        ``txn=(app_id, version)`` (or a list of pairs) advances them.
+        A ``txn`` the base already records is a replay: returns None
+        without calling ``make_manifest``.  Both run against the
+        freshest base INSIDE the loop, so two racing replays still
+        commit exactly once — the Delta txnAppId/txnVersion pattern.
 
         What lands on disk is ``_delta_of(base, nxt)`` — O(files this
         commit touched), never O(live files) — plus, every
@@ -1361,9 +1390,16 @@ class ManifestTable:
         replace()).  Returns the full resolved next state."""
         for _ in range(max_retries):
             base = self.manifest()
+            txns = base.get("txn", {})
+            if txn is not None:
+                txns = _txn_advance(txns, txn)
+                if txns is None:
+                    return None  # replayed: already committed
             nxt = make_manifest(base)
             if nxt is None:
-                return None  # make_manifest declined (e.g. replayed txn)
+                return None  # make_manifest declined
+            if txns:
+                nxt["txn"] = txns
             nxt["version"] = base["version"] + 1
             nxt["parent"] = base["version"]
             cfg = self._config_dict()  # table metadata rides every commit
@@ -1420,24 +1456,15 @@ class ManifestTable:
         new, stats = self._write_data(df)
         df_schema = df.schema
 
-        def mk(base: dict) -> dict | None:
-            txns = dict(base.get("txn", {}))
-            if txn is not None:
-                nt = _txn_advance(txns, txn)
-                if nt is None:
-                    return None  # replayed batch: already committed
-                txns = nt
-            m = {
+        def mk(base: dict) -> dict:
+            return {
                 "files": base["files"] + new,
                 "op": "append",
                 "stats": {**base.get("stats", {}), **stats},
                 "schema": _merge_schema(base.get("schema"), df_schema),
             }
-            if txns:
-                m["txn"] = txns
-            return m
 
-        res = self._commit(mk)
+        res = self._commit(mk, txn=txn)
         if res is None:
             self._discard_staged(new)  # replay that never commits
         return res
@@ -1460,52 +1487,31 @@ class ManifestTable:
 
         df_schema = df.schema
 
-        def mk(base: dict) -> dict | None:
-            txns = dict(base.get("txn", {}))
-            if txn is not None:
-                nt = _txn_advance(txns, txn)
-                if nt is None:
-                    return None  # replayed: already committed
-                txns = nt
-            m = {
+        def mk(base: dict) -> dict:
+            return {
                 "files": new,
                 "op": "replace",
                 "stats": stats,
                 # replace resets content AND schema (no old files remain
-                # to stay readable)
+                # to stay readable); _commit carries the txn ledger, so
+                # a stream replay after a replace still declines
                 "schema": df_schema.jsonValue(),
                 **(extra or {}),
             }
-            if txns:
-                # replacing CONTENT must not erase sink idempotence
-                # state — a stream replay after a replace would
-                # otherwise double-commit
-                m["txn"] = txns
-            return m
 
-        res = self._commit(mk)
+        res = self._commit(mk, txn=txn)
         if res is None:
             self._discard_staged(new)
         return res
 
-    def _bounds(self, df: DataFrame, col: str) -> tuple | None:
-        """Batch [min, max] for ``col`` in the manifest's stat encoding
-        (ISO strings for temporals) — one 1-row aggregate, never a scan
-        of the table.  None when the batch is empty or the bounds don't
-        encode (then pruning is skipped, merge stays correct)."""
-        from pyspark.sql import functions as F
-
-        row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).first()
-        if row is None or row["lo"] is None:
-            return None
-        lo, hi = _jsonable(row["lo"]), _jsonable(row["hi"])
-        return None if lo is None or hi is None else (lo, hi)
-
     def _count_bounds(self, df: DataFrame, col: str) -> tuple[int, tuple | None]:
-        """(row count, :meth:`_bounds`-style bounds) in ONE 1-row
-        aggregate — merge/upsert need both an emptiness answer and the
-        prune bounds for the same batch, and two separate jobs doubled
-        the batch-plan computations."""
+        """(row count, batch [min, max] of ``col``) in ONE 1-row
+        aggregate, bounds in the manifest's stat encoding (ISO strings
+        for temporals) — a keyed rewrite needs both an emptiness answer
+        and the prune bounds for the same batch, and two separate jobs
+        doubled the batch-plan computations.  Bounds are None when the
+        batch is empty or they don't encode (then pruning is skipped,
+        the rewrite stays correct)."""
         from pyspark.sql import functions as F
 
         row = df.agg(
@@ -1518,6 +1524,123 @@ class ManifestTable:
             return n, None
         lo, hi = _jsonable(row["lo"]), _jsonable(row["hi"])
         return n, (None if lo is None or hi is None else (lo, hi))
+
+    def _files_holding(self, kdf: DataFrame, kcols: list[str]):
+        """``touched_of`` for a keyed rewrite: ``snap -> set`` of the
+        snapshot's files whose recorded [min, max] of the first
+        stats-tracked key column may hold one of ``kdf``'s keys (every
+        file when no key column has usable stats), or None when ``kdf``
+        is empty.  The one aggregate runs here, outside the restart
+        loop: emptiness and bounds are functions of the batch, not of
+        the snapshot."""
+        col = next((k for k in self.stats_cols if k in kcols), None)
+        if col is None:
+            if kdf.isEmpty():
+                return None
+            bounds = None
+        else:
+            n, bounds = self._count_bounds(kdf, col)
+            if n == 0:
+                return None
+        if bounds is None:
+            return lambda snap: set(snap["files"])
+        lo, hi = bounds
+        return lambda snap: set(self.pruned_files(col, lo, hi, snap["version"]))
+
+    def _replayed(self, txn, snap: dict | None = None) -> bool:
+        """Whether ``snap`` (default: the current state) already records
+        ``txn`` — the pre-check that lets a replayed rewrite decline
+        before its first Spark job.  :meth:`_commit` stays the
+        authoritative, race-safe check."""
+        state = self._state() if snap is None else snap
+        return txn is not None and _txn_replayed(state.get("txn", {}), txn)
+
+    def _rewrite(
+        self, spark, op, touched_of, keep_rows, inserts, txn, max_restarts
+    ) -> dict | None:
+        """The copy-on-write loop behind :meth:`upsert`,
+        :meth:`merge_delta`, :meth:`delete_range` and
+        :meth:`delete_where` (the Delta MERGE/DELETE discipline).  Each
+        attempt:
+
+        - takes a snapshot; a ``txn`` it already records is a replay and
+          returns None before any Spark job;
+        - ``touched = touched_of(snap)``: the files that may hold
+          affected rows.  Every other file is carried BY NAME — metadata
+          only, zero read, zero write;
+        - is IDLE when nothing is touched, there are no ``inserts`` and
+          no ``txn`` to record: returns None and publishes nothing (a
+          content-free version would only push append-only consumers
+          onto their full-recompute path).  With a ``txn`` the commit
+          lands metadata-only, so the watermark advances exactly once;
+        - reads the touched files under the snapshot's recorded schema,
+          keeps ``keep_rows(rows)``, unions ``inserts`` and writes the
+          result (a rewritten file left with zero rows disappears);
+        - commits as ONE ``op`` version only if the table's file set is
+          still the snapshot's: any interleaved commit may share our
+          keys, so a stale rewrite never publishes — its staged files
+          are reaped and the attempt restarts on the new snapshot.
+
+        Inserted rows evolve the recorded schema; rewritten rows were
+        read under it, so a commit without inserts keeps the base
+        schema.  Raises :class:`CommitConflict` after ``max_restarts``
+        lost races."""
+        for _ in range(max_restarts):
+            snap = self.manifest()
+            if self._replayed(txn, snap):
+                return None
+            snap_set = set(snap["files"])
+            touched = touched_of(snap) & snap_set
+            if not touched and inserts is None and txn is None:
+                return None
+            parts = []
+            if touched:
+                rows = self._read_files(
+                    spark,
+                    [os.path.join(self.data_dir, f) for f in sorted(touched)],
+                    snap["version"],
+                )
+                parts.append(keep_rows(rows))
+            if inserts is not None:
+                parts.append(inserts)
+            new, stats, written = [], {}, None
+            if parts:
+                out = parts[0]
+                for p in parts[1:]:
+                    out = out.unionByName(p, allowMissingColumns=True)
+                new, stats = self._write_data(out)
+                if inserts is not None:
+                    written = out.schema
+            untouched = [f for f in snap["files"] if f not in touched]
+
+            def mk(base: dict) -> dict | None:
+                if set(base["files"]) != snap_set:
+                    return None  # table moved: the rewrite is stale
+                base_stats = base.get("stats", {})
+                m = {
+                    "files": untouched + new,
+                    "op": op,
+                    "stats": {
+                        **{f: base_stats[f] for f in untouched if f in base_stats},
+                        **stats,
+                    },
+                }
+                schema = base.get("schema")
+                if written is not None:
+                    schema = _merge_schema(schema, written)
+                if schema is not None:
+                    m["schema"] = schema
+                return m
+
+            res = self._commit(mk, txn=txn)
+            if res is not None:
+                return res
+            self._discard_staged(new)  # stale or replayed: never publishes
+        if self._replayed(txn):
+            return None  # the last race was lost to this txn's own commit
+        raise CommitConflict(
+            f"{op} lost {max_restarts} commit races under {self.root}"
+        )
 
     def upsert(
         self,
@@ -1533,26 +1656,25 @@ class ManifestTable:
         manifest commit — no rename-swap exposure window, no
         exclusive-access contract.
 
-        TOUCHED-FILES-ONLY copy-on-write (the Delta MERGE discipline):
-        a live file whose recorded [min, max] for the first
-        stats-tracked key column cannot contain any batch key is carried
-        into the new manifest UNTOUCHED — metadata only, zero read,
-        zero write.  A daily-keyed table absorbing today's batch
+        TOUCHED-FILES-ONLY copy-on-write through :meth:`_rewrite`: a
+        live file whose recorded [min, max] for the first stats-tracked
+        key column cannot contain any batch key is carried into the new
+        manifest untouched.  A daily-keyed table absorbing today's batch
         rewrites today's files, not the table; that is the difference
-        between O(batch) and O(table) per micro-batch at 100 TB.
-        Files without usable stats are conservatively rewritten.
+        between O(batch) and O(table) per micro-batch at 100 TB.  Files
+        without usable stats are conservatively rewritten.  Concurrency
+        and ``txn=(app_id, version)`` replay semantics are
+        :meth:`_rewrite`'s: a merge computed against a moved table
+        restarts, and a replay declines before any Spark job.
 
-        Concurrency: the merge is computed against a snapshot; if ANY
-        commit lands in between (its rows might share our keys), the CAS
-        declines and the whole merge restarts against the new snapshot
-        — never publishes a torn merge.  ``txn=(app_id, version)``
-        replay is declined idempotently exactly as in :meth:`append`.
-
-        An EMPTY batch is a no-op (returns None, nothing committed):
-        without the short-circuit an idle micro-batch would fall into
-        the no-usable-bounds path and rewrite the whole table — the
-        exact O(table)-per-batch cost this method exists to avoid.
+        An EMPTY batch is a no-op (returns None, nothing committed, even
+        with a ``txn``): without the short-circuit an idle micro-batch
+        would fall into the no-usable-bounds path and rewrite the whole
+        table — the exact O(table)-per-batch cost this method exists to
+        avoid.
         """
+        if self._replayed(txn):
+            return None
         # Persist the prepared batch for the duration of the merge: it is
         # read up to 4x (emptiness, stats bounds, the anti-join probe, the
         # rewrite union) and callers routinely hand in EXPENSIVE plans
@@ -1561,92 +1683,21 @@ class ManifestTable:
         # is reused AND expensive; released in the finally below).
         df = self._ann_prepare(df.dropDuplicates(keys)).persist()
         try:
-            return self._upsert_persisted(spark, df, keys, txn, max_restarts)
+            touched_of = self._files_holding(df, keys)
+            if touched_of is None:
+                return None  # idle tick: no content, no commit
+            probe = df.select(*keys)
+            return self._rewrite(
+                spark,
+                "upsert",
+                touched_of,
+                lambda rows: rows.join(probe, keys, "left_anti"),
+                df,
+                txn,
+                max_restarts,
+            )
         finally:
             df.unpersist()
-
-    def _upsert_persisted(self, spark, df, keys, txn, max_restarts):
-        # ONE aggregate answers BOTH emptiness and the prune bounds, and
-        # is hoisted out of the CAS loop — bounds are a function of the
-        # batch, not of the snapshot (previously: an isEmpty job plus a
-        # min/max job per restart attempt).
-        prune_col = next((k for k in self.stats_cols if k in keys), None)
-        if prune_col is not None:
-            n, bounds = self._count_bounds(df, prune_col)
-            if n == 0:
-                return None  # idle tick: no content, no commit
-        else:
-            if df.isEmpty():
-                return None  # idle tick: no content, no commit
-            bounds = None
-        merged_schema_src = None
-        for _ in range(max_restarts):
-            snap = self.manifest()
-            snap_files = list(snap["files"])
-            snap_set = set(snap_files)
-            if bounds is not None:
-                touched = set(
-                    self.pruned_files(
-                        prune_col, bounds[0], bounds[1], snap["version"]
-                    )
-                ) & snap_set
-            else:
-                touched = snap_set  # no usable stats: rewrite everything
-            untouched = [f for f in snap_files if f not in touched]
-            if touched:
-                existing = self._read_files(
-                    spark,
-                    [os.path.join(self.data_dir, f) for f in sorted(touched)],
-                    snap["version"],
-                )
-                keep = existing.join(df.select(*keys), keys, "left_anti")
-                merged = keep.unionByName(df, allowMissingColumns=True)
-            else:
-                merged = df
-            merged_schema_src = merged.schema
-            new, stats = self._write_data(merged)
-            declined = {"replay": False}
-
-            def mk(base: dict) -> dict | None:
-                txns = dict(base.get("txn", {}))
-                if txn is not None:
-                    nt = _txn_advance(txns, txn)
-                    if nt is None:
-                        declined["replay"] = True
-                        return None
-                    txns = nt
-                if set(base["files"]) != snap_set:
-                    return None  # table moved: the merge is stale
-                base_stats = base.get("stats", {})
-                m = {
-                    "files": untouched + new,
-                    "op": "upsert",
-                    "stats": {
-                        **{
-                            f: base_stats[f]
-                            for f in untouched
-                            if f in base_stats
-                        },
-                        **stats,
-                    },
-                    "schema": _merge_schema(
-                        base.get("schema"), merged_schema_src
-                    ),
-                }
-                if txns:
-                    m["txn"] = txns
-                return m
-
-            res = self._commit(mk)
-            if res is not None:
-                return res
-            self._discard_staged(new)  # staged merge that will never publish
-            if declined["replay"]:
-                return None  # idempotent replay: already committed
-            # else: lost to a concurrent commit — re-merge on its snapshot
-        raise CommitConflict(
-            f"upsert lost {max_restarts} merge races under {self.root}"
-        )
 
     def merge_delta(
         self,
@@ -1665,19 +1716,19 @@ class ManifestTable:
         keyed retraction instead of a full recompute (reference intent:
         the K7 wide-table sink at scale, DwsOrderWideApp.scala:129).
 
-        TOUCHED-FILES-ONLY like :meth:`upsert`: per delete set, live
-        files are pre-pruned by the recorded [min, max] of the first
-        stats-tracked key column — files provably outside every delete
-        key's bounds are carried BY NAME, metadata only — then the
-        exact ``left_anti`` joins run only on the touched files (stats
-        may only skip work, never change the result).  Files without
-        usable stats are conservatively rewritten.  Empty delete sets
-        are dropped up front (an idle CDC tick must not fall into the
-        no-usable-bounds rewrite-everything path); all-empty input is a
-        no-op returning None.  Concurrency/txn replay semantics are
-        :meth:`upsert`'s: computed against a snapshot, CAS-declined and
-        restarted if the table moved, replayed ``txn`` declined
-        idempotently."""
+        TOUCHED-FILES-ONLY through :meth:`_rewrite`: per delete set,
+        live files are pre-pruned by the recorded [min, max] of the
+        first stats-tracked key column — the same helper as
+        :meth:`upsert` — then the exact ``left_anti`` joins run only on
+        the touched files (stats may only skip work, never change the
+        result).  Empty delete sets are dropped up front (an idle CDC
+        tick must not fall into the no-usable-bounds rewrite-everything
+        path).  Input that touches nothing and inserts nothing is idle
+        without a ``txn`` (returns None) and a metadata-only commit with
+        one, so the watermark still advances exactly once.
+        Concurrency and replay semantics are :meth:`_rewrite`'s."""
+        if self._replayed(txn):
+            return None
         # Persist every input for the duration of the merge (released in
         # the finally): each delete key set is read up to 3x (emptiness,
         # stats bounds, the per-file anti-joins) and the inserts plan 2x
@@ -1700,131 +1751,28 @@ class ManifestTable:
             ]
             if inserts is not None:
                 inserts = _p(self._ann_prepare(inserts))
-            return self._merge_delta_persisted(
-                spark, inserts, staged, txn, max_restarts
+            live = []  # (kcols, kdf, touched_of) per non-empty delete set
+            for kcols, kdf in staged:
+                holding = self._files_holding(kdf, kcols)
+                if holding is not None:
+                    live.append((kcols, kdf, holding))
+            if inserts is not None and inserts.isEmpty():
+                inserts = None
+
+            def touched_of(snap: dict) -> set[str]:
+                return set().union(*(holding(snap) for _, _, holding in live))
+
+            def keep_rows(rows: DataFrame) -> DataFrame:
+                for kcols, kdf, _ in live:
+                    rows = rows.join(kdf, kcols, "left_anti")
+                return rows
+
+            return self._rewrite(
+                spark, "merge", touched_of, keep_rows, inserts, txn, max_restarts
             )
         finally:
             for d in persisted:
                 d.unpersist()
-
-    def _merge_delta_persisted(
-        self, spark, inserts, staged, txn, max_restarts
-    ):
-        # ONE aggregate per delete set answers BOTH "is it empty?" and
-        # "what are its prune bounds?" (previously a separate isEmpty
-        # job then a separate min/max job per CAS attempt), and the
-        # bounds are hoisted out of the restart loop — they are a
-        # function of the input batch, not of the snapshot.
-        live: list[tuple] = []  # (kcols, kdf, prune_col, bounds)
-        for kcols, kdf in staged:
-            prune_col = next(
-                (k for k in self.stats_cols if k in kcols), None
-            )
-            if prune_col is not None:
-                n, bounds = self._count_bounds(kdf, prune_col)
-                if n == 0:
-                    continue
-            else:
-                if kdf.isEmpty():
-                    continue
-                bounds = None
-            live.append((kcols, kdf, prune_col, bounds))
-        has_inserts = inserts is not None and not inserts.isEmpty()
-        if not live and not has_inserts and txn is None:
-            return None  # idle tick: no content, no commit
-        # content-free but WATERMARK-BEARING input (a propagator
-        # absorbed a net-zero change range) falls through: the txn must
-        # still advance exactly once via a metadata-only commit, or the
-        # caller would re-read an ever-growing range on every run
-        merged_schema_src = None
-        for _ in range(max_restarts):
-            snap = self.manifest()
-            snap_files = list(snap["files"])
-            snap_set = set(snap_files)
-            touched: set[str] = set()
-            for kcols, kdf, prune_col, bounds in live:
-                if prune_col is not None and bounds is not None:
-                    touched |= set(
-                        self.pruned_files(
-                            prune_col, bounds[0], bounds[1], snap["version"]
-                        )
-                    ) & snap_set
-                else:
-                    touched = set(snap_set)  # no usable stats: rewrite all
-                    break
-            untouched = [f for f in snap_files if f not in touched]
-            parts = []
-            if touched:
-                keep = self._read_files(
-                    spark,
-                    [os.path.join(self.data_dir, f) for f in sorted(touched)],
-                    snap["version"],
-                )
-                for kcols, kdf, _pc, _b in live:
-                    keep = keep.join(kdf, kcols, "left_anti")
-                parts.append(keep)
-            if has_inserts:
-                parts.append(inserts)
-            if parts:
-                merged = parts[0]
-                for p in parts[1:]:
-                    merged = merged.unionByName(p, allowMissingColumns=True)
-                merged_schema_src = merged.schema
-                new, stats = self._write_data(merged)
-            else:
-                # every file pruned away and nothing to insert: the
-                # merge is metadata-only, but it still commits — the
-                # txn watermark must advance exactly once per batch
-                merged_schema_src = None
-                new, stats = [], {}
-            declined = {"replay": False}
-
-            def mk(base: dict) -> dict | None:
-                txns = dict(base.get("txn", {}))
-                if txn is not None:
-                    nt = _txn_advance(txns, txn)
-                    if nt is None:
-                        declined["replay"] = True
-                        return None
-                    txns = nt
-                if set(base["files"]) != snap_set:
-                    return None  # table moved: the merge is stale
-                base_stats = base.get("stats", {})
-                m = {
-                    "files": untouched + new,
-                    "op": "merge",
-                    "stats": {
-                        **{
-                            f: base_stats[f]
-                            for f in untouched
-                            if f in base_stats
-                        },
-                        **stats,
-                    },
-                    "schema": (
-                        base.get("schema")
-                        if merged_schema_src is None
-                        else _merge_schema(
-                            base.get("schema"), merged_schema_src
-                        )
-                    ),
-                }
-                if m["schema"] is None:
-                    del m["schema"]
-                if txns:
-                    m["txn"] = txns
-                return m
-
-            res = self._commit(mk)
-            if res is not None:
-                return res
-            self._discard_staged(new)  # staged merge that never publishes
-            if declined["replay"]:
-                return None  # idempotent replay: already committed
-            # else: lost to a concurrent commit — re-merge on its snapshot
-        raise CommitConflict(
-            f"merge_delta lost {max_restarts} merge races under {self.root}"
-        )
 
     def delete_range(
         self,
@@ -1840,14 +1788,13 @@ class ManifestTable:
         primitive a 100 TB training-data table needs (drop a day, drop
         a source's id range) without rewriting history.
 
-        TOUCHED-FILES-ONLY, like :meth:`upsert`: a live file whose
+        TOUCHED-FILES-ONLY through :meth:`_rewrite`: a live file whose
         recorded [min, max] for ``col`` cannot overlap the range is
         carried untouched (metadata only); overlapping or stat-less
-        files are rewritten with the complement predicate.  A rewritten
-        file left with zero rows simply disappears (``_write_data``
-        drops empty parts).  Concurrency and ``txn`` replay semantics
-        are upsert's: any interleaved commit declines the CAS and the
-        delete restarts against the new snapshot.
+        files are rewritten with the complement predicate.  A delete no
+        file can match publishes nothing (returns None) unless a
+        ``txn`` must be recorded.  Concurrency and ``txn`` replay
+        semantics are :meth:`_rewrite`'s.
 
         The op records as ``delete`` (non-append), so incremental
         consumers (:meth:`read_appended`, continuous aggregates) take
@@ -1873,7 +1820,15 @@ class ManifestTable:
             # is exactly "files that may contain a matching row"
             return set(self.pruned_files(col, lo, hi, snap["version"]))
 
-        return self._delete_commit(spark, cond, touched_of, txn, max_restarts)
+        return self._rewrite(
+            spark,
+            "delete",
+            touched_of,
+            lambda rows: rows.filter(~cond),
+            None,
+            txn,
+            max_restarts,
+        )
 
     def delete_where(
         self,
@@ -1898,8 +1853,9 @@ class ManifestTable:
         to NULL are kept), so pruning can only skip work, never change
         results.  An unparseable predicate degrades to rewriting every
         file — still correct, just unpruned.  Everything else
-        (atomicity, ``txn`` replay, CAS restart, ``op: delete`` CDC
-        fallback) is :meth:`delete_range`'s."""
+        (atomicity, idle no-match, ``txn`` replay, CAS restart,
+        ``op: delete`` CDC fallback) is :meth:`_rewrite`'s, as for
+        :meth:`delete_range`."""
         from pyspark.sql import functions as F
 
         from .skipping import predicate_bounds, ranges_overlap_stats
@@ -1926,69 +1882,14 @@ class ManifestTable:
                     keep.add(f)
             return keep
 
-        return self._delete_commit(spark, safe, touched_of, txn, max_restarts)
-
-    def _delete_commit(
-        self, spark, cond, touched_of, txn, max_restarts
-    ) -> dict | None:
-        """Shared delete machinery: rewrite the files ``touched_of``
-        selects with the complement of NULL-safe ``cond``, carry the
-        rest untouched, publish as one ``op: delete`` commit with
-        upsert's concurrency and replay semantics."""
-        for _ in range(max_restarts):
-            snap = self.manifest()
-            snap_files = list(snap["files"])
-            snap_set = set(snap_files)
-            touched = touched_of(snap) & snap_set
-            untouched = [f for f in snap_files if f not in touched]
-            new: list[str] = []
-            stats: dict = {}
-            if touched:
-                kept = self._read_files(
-                    spark,
-                    [os.path.join(self.data_dir, f) for f in sorted(touched)],
-                    snap["version"],
-                ).filter(~cond)
-                new, stats = self._write_data(kept)
-            declined = {"replay": False}
-
-            def mk(base: dict) -> dict | None:
-                txns = dict(base.get("txn", {}))
-                if txn is not None:
-                    nt = _txn_advance(txns, txn)
-                    if nt is None:
-                        declined["replay"] = True
-                        return None
-                    txns = nt
-                if set(base["files"]) != snap_set:
-                    return None  # table moved: the rewrite is stale
-                base_stats = base.get("stats", {})
-                m = {
-                    "files": untouched + new,
-                    "op": "delete",
-                    "stats": {
-                        **{
-                            f: base_stats[f]
-                            for f in untouched
-                            if f in base_stats
-                        },
-                        **stats,
-                    },
-                }
-                if base.get("schema") is not None:
-                    m["schema"] = base["schema"]  # deletes never evolve
-                if txns:
-                    m["txn"] = txns
-                return m
-
-            res = self._commit(mk)
-            if res is not None:
-                return res
-            self._discard_staged(new)
-            if declined["replay"]:
-                return None
-        raise CommitConflict(
-            f"delete lost {max_restarts} commit races under {self.root}"
+        return self._rewrite(
+            spark,
+            "delete",
+            touched_of,
+            lambda rows: rows.filter(~safe),
+            None,
+            txn,
+            max_restarts,
         )
 
     def restore(self, version: int) -> dict:
@@ -2025,8 +1926,6 @@ class ManifestTable:
             }
             if target.get("schema") is not None:
                 m["schema"] = target["schema"]  # content implies shape
-            if base.get("txn"):
-                m["txn"] = base["txn"]  # never resets sink idempotence
             return m
 
         return self._commit(mk)
@@ -2087,8 +1986,6 @@ class ManifestTable:
                     **{f: base_stats[f] for f in added_since if f in base_stats},
                 },
             }
-            if base.get("txn"):
-                m["txn"] = base["txn"]  # maintenance never resets txns
             if base.get("schema") is not None:
                 m["schema"] = base["schema"]  # rewrite keeps the evolved shape
             return m
