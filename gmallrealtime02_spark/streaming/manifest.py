@@ -1608,7 +1608,14 @@ class ManifestTable:
                 out = parts[0]
                 for p in parts[1:]:
                     out = out.unionByName(p, allowMissingColumns=True)
-                new, stats = self._write_data(out)
+                # Size the output to the files it replaces: unsized, one
+                # touched file comes back as one file per non-empty
+                # shuffle partition, so every repeat rewrite of the same
+                # day multiplies its small files.  Insert-only writes
+                # stay unsized, and ANN tables keep _write_data's
+                # cell-range layout, which an explicit coalesce disables.
+                size = len(touched) if touched and not self.ann_col else None
+                new, stats = self._write_data(out, coalesce=size)
                 if inserts is not None:
                     written = out.schema
             untouched = [f for f in snap["files"] if f not in touched]

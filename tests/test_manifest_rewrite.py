@@ -141,6 +141,21 @@ def test_rewrite_op_contract(spark, sf_dir, tmp_path, op):
     assert _staging_reaped(raced)
 
 
+@pytest.mark.parametrize("op", ["upsert", "merge_delta", "delete_where"])
+def test_rewrite_replaces_a_touched_file_with_at_most_one(
+    spark, sf_dir, tmp_path, op
+):
+    """A rewrite's output is sized to the files it replaces: each op
+    here touches only the [100, 200) file, and an unsized write would
+    split it into one file per non-empty shuffle partition — files a
+    repeat of the same rewrite then has to read and rewrite again."""
+    t = _fixture(spark, sf_dir, str(tmp_path / "t"))
+    before = set(t.manifest()["files"])
+    after = set(OPS[op][0](spark, sf_dir, t)["files"])
+    assert len(before - after) == 1
+    assert len(after - before) <= 1, len(after - before)
+
+
 def test_delete_matching_nothing_publishes_nothing(spark, sf_dir, tmp_path):
     """A delete whose stats prove no file can match, with no txn to
     record, is idle: no version, so append-only consumers stay
