@@ -17,11 +17,13 @@ Modes (``python bench.py [flag]``; keys of :data:`MODES`):
   ``queries`` as ``scaled_*`` keys.  The query list and the plans live in
   ``perfbench`` only, so a plan change moves both harnesses.
 - ``--streaming``: rows/s of the structured-streaming jobs over a file
-  source split into micro-batches.
+  source split into micro-batches, and each job's data-trigger p50
+  (``<job>_trigger_p50_ms``).
 - ``--sweep``: every registry query, cold single-shot.
 - ``--scale-curve``: rows/s of five ops at sf0.001 / sf0.01 / sf0.1.
 - ``--stress``: kernel throughput over 16-64x replicated inputs, with
-  raising floors on the codec decoders.
+  raising floors on the codec decoders: every subject is timed and the
+  JSON line lists the misses (``below_floor``) before the mode fails.
 - ``--rollup-scaling``, ``--merge-scaling``, ``--bloom-scaling``,
   ``--manifest-scaling``, ``--cdc-scaling``, ``--ann-scaling``: gates on
   the table service's scaling claims; each raises when its claim fails.
@@ -51,6 +53,7 @@ from gmallrealtime02_spark.session import get_spark
 from gmallrealtime02_spark.sources.tables import DEFAULT_SF_DIR, load_table
 from perfbench.batch_headline import scaled_plans
 from perfbench.metrics import HEADLINE, SCALED
+from perfbench.stats import p50_or_zero
 
 
 def _session(app_name: str):
@@ -237,6 +240,7 @@ def bench_streaming() -> None:
 
     spark, sf_dir, sf = _session("bench-streaming")
     jobs: dict[str, float] = {}
+    triggers: dict[str, float] = {}
     with tempfile.TemporaryDirectory(
         prefix="bench_stream_", ignore_cleanup_errors=True
     ) as work:
@@ -254,7 +258,8 @@ def bench_streaming() -> None:
 
         def run(name, out, rows, mode="append", sink=None):
             """Drain ``out`` through the noop sink, or the foreachBatch
-            ``sink``, and record ``name``'s rows/s."""
+            ``sink``, and record ``name``'s rows/s and the p50 of its
+            data triggers' ``triggerExecution`` ms."""
             w = out.writeStream
             w = w.foreachBatch(sink) if sink else w.outputMode(mode).format("noop")
             q = w.option(
@@ -264,6 +269,11 @@ def bench_streaming() -> None:
             q.processAllAvailable()
             q.stop()
             jobs[f"{name}_rows_per_s"] = round(rows / (time.perf_counter() - t0), 1)
+            triggers[f"{name}_trigger_p50_ms"] = p50_or_zero([
+                p.durationMs["triggerExecution"]
+                for p in q.recentProgress
+                if p.numInputRows
+            ])
 
         # --- streaming_dau: events → first-seen dedup (stateful) ---
         # watermarks need TIMESTAMP (LTZ); testdata surfaces NTZ
@@ -338,7 +348,8 @@ def bench_streaming() -> None:
         mt = ManifestTable(os.path.join(work, "manifest_tbl"))
         run("streaming_manifest_sink", doc_stream(), n_rows,
             sink=make_manifest_append_sink(mt))
-    emit("streaming_rows_per_s", round(min(jobs.values()), 1), "rows/s", jobs, sf)
+    emit("streaming_rows_per_s", round(min(jobs.values()), 1), "rows/s",
+         {**jobs, **triggers}, sf)
 
 
 def bench_sweep() -> None:
@@ -519,7 +530,9 @@ def bench_stress() -> None:
     # subject is sized so each run is decode-bound, not scan-overhead-
     # bound.  Floors are RAISING gates set ~5x under the recorded
     # 32-core numbers: a codec regression that drops below the floor
-    # fails the bench run outright, it does not quietly re-baseline.
+    # fails the bench run, it does not quietly re-baseline.  Misses are
+    # collected, so every subject is still timed and the JSON line
+    # (with ``below_floor``) printed before the run fails.
     # When Pillow ships, each subject gets a *_pillow twin over the
     # SAME persisted payloads (the production upgrade path —
     # decode_media's default decoder prefers it); in a sandbox without
@@ -531,6 +544,8 @@ def bench_stress() -> None:
         has_pillow = True
     except ImportError:
         has_pillow = False
+
+    below_floor: list[str] = []
 
     def codec_subject(name, media_builder, decoder, reps, px_per_img, floor):
         media = media_builder(doc_replicas(reps)).persist()
@@ -556,9 +571,8 @@ def bench_stress() -> None:
                 "floor_rows_per_s": floor,
             }
             if n_img / best < floor:
-                raise RuntimeError(
-                    f"{name}{suffix} fell below its raising floor: "
-                    f"{n_img / best:.0f} < {floor} rows/s"
+                below_floor.append(
+                    f"{name}{suffix}: {n_img / best:.0f} < {floor} rows/s"
                 )
         media.unpersist()
 
@@ -724,7 +738,13 @@ def bench_stress() -> None:
         out,
         sf,
         spark,
+        below_floor=below_floor,
     )
+    if below_floor:
+        raise RuntimeError(
+            "codec subjects fell below their raising floors: "
+            + "; ".join(below_floor)
+        )
 
 
 def bench_rollup_scaling() -> None:

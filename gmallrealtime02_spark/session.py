@@ -22,6 +22,22 @@ knob is chosen to also be the right default on a real cluster at 100 TB:
   job of a parquet read, is avoided at the reads themselves: they pass
   an explicit schema (``sources.tables.load_table`` builds it from the
   parquet footer).
+- Local masters only: streaming checkpoints are written through
+  ``FileSystemBasedCheckpointFileManager`` instead of Spark's default
+  FileContext-based manager.  Every trigger writes the file source's
+  metadata log, the offset log, each state partition's delta and the
+  commit log.  Without the native Hadoop library, the local file system
+  forks ``chmod`` for each file and directory the FileContext path
+  creates, and the FileContext rename forks ``readlink``.  So each small
+  checkpoint file cost several process launches on the trigger path.
+  Atomicity is unchanged on ``file:``: both managers write a temp file
+  and publish it by check-then-rename (FileContext's ``rename(..., NONE)``
+  stats the target, then renames, as the FileSystem path does).
+  Hadoop's ``.crc`` sidecars and Spark's checkpoint file checksums
+  (``spark.sql.streaming.checkpoint.fileChecksum.enabled``) stay on.
+  Cluster masters keep Spark's default: their checkpoints live on HDFS
+  or an object store, where FileContext's no-overwrite rename is one
+  atomic call and nothing forks.
 """
 
 from __future__ import annotations
@@ -82,6 +98,10 @@ def get_spark(
     if master == "local" or master.startswith("local["):
         builder = builder.config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647"
+        ).config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -26,9 +26,12 @@ each spooling to its own prefix (filenames embed a uuid4, so spools
 merge collision-free onto shared storage).  One file per POST is cheap
 per trigger on a local master: the session lists a trigger's new files
 on the driver (see ``session.py``).  What remains in sustained use is
-the file source's ``latestOffset``, which lists the whole route
-directory on every trigger — O(files ever spooled).  The Kafka source
-builders in ``streaming/kafka.py`` do not pay it.
+the file source's ``latestOffset``.  Its write of the source's metadata
+log forks nothing on a local master (``session.py``: about half of
+``latestOffset`` went to process launches before).  Its cost is the
+listing: it lists the whole route directory on every trigger —
+O(files ever spooled).  The Kafka source builders in
+``streaming/kafka.py`` do not pay it.
 """
 
 from __future__ import annotations
