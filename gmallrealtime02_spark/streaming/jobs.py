@@ -24,6 +24,15 @@ Mapping:
   overlapping 10s/5s windows + Redis dedup (J4+J5): no duplicate-from-
   overlap, no loss at window edges, bounded state.
 
+Memory contract of the append sinks (``start_dau_job``,
+``start_ods_split_job``): ``make_manifest_append_sink`` collects each
+micro-batch's OUTPUT to the driver and writes its files there (one
+collect instead of a Spark write job per trigger).  The spool-fed DAU
+job emits at most one row per new input file, and the file source
+already holds those file paths on the driver.  ``start_ods_split_job``'s
+caller bounds its Kafka batch with ``maxOffsetsPerTrigger``; without it
+the first batch is the topic's whole backlog.
+
 Scale notes: dedup/join state lives in the state store (RocksDB on a
 real cluster — spark.sql.streaming.stateStore.providerClass).  The
 reference's day-scoped no-TTL Redis state maps to
@@ -113,6 +122,12 @@ def start_dau_job(
       dropped as late;
     - a checkpoint replay of a committed ``batch_id`` is declined by the
       per-app txn watermark (``app_id="dau"``).
+
+    The sink collects the batch's rows to the driver and writes its
+    per-dt files there with pyarrow, so the trigger's one Spark job is
+    the stateful plan itself.  Memory: the driver holds one batch's
+    output, at most one row per new spool file (whose paths the file
+    source already holds on the driver).
 
     Every trigger adds small files (and a no-data trigger that only
     advances the watermark publishes an empty version):

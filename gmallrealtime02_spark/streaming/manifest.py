@@ -90,13 +90,21 @@ def _merge_schema(base_json: dict | None, new_schema) -> dict:
 
 def _jsonable(v):
     """Footer statistics value → JSON-storable, order-preserving form
-    (ISO strings for temporals; None = unusable, drop the stat)."""
+    (ISO strings for temporals; None = unusable, drop the stat).
+    pyarrow decodes a UTC-adjusted timestamp's footer min/max as a
+    tz-aware datetime (Spark's INT96 timestamps carry no statistics;
+    pyarrow-written ones do): it is stored in its naive UTC form, the
+    shape the executor-side build records in the engine's UTC session
+    and ``temporal_canon`` parses — an ``isoformat()`` '+00:00' suffix
+    would order as a plain string."""
     import datetime
 
     if isinstance(v, bool):
         return None  # min/max pruning on booleans is pointless
     if isinstance(v, (int, float, str)):
         return v
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     if isinstance(v, (datetime.datetime, datetime.date)):
         return v.isoformat()
     if isinstance(v, bytes):
@@ -597,8 +605,8 @@ class ManifestTable:
     def _write_data(
         self, df: DataFrame, coalesce: int | None = None
     ) -> tuple[list[str], dict]:
-        import pyarrow.parquet as pq
-
+        """Stage ``df``'s rows with ONE Spark parquet write job (the
+        batch writer: parallel, any size), then :meth:`_publish`."""
         if self.ann_col and coalesce is None:
             from pyspark.sql import functions as F
 
@@ -619,29 +627,93 @@ class ManifestTable:
                 # gracefully, never wrongly.
                 n = max(len(self.ann_centroids or []), 1)
                 df = df.repartitionByRange(n, F.col(ANN_CELL))
-        tmp = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
+        tmp = self._staging_dir()
         (df.coalesce(coalesce) if coalesce else df).write.parquet(tmp)
+        return self._publish(tmp, df)
+
+    def _write_collected(
+        self, df: DataFrame, layout_by: list[str] | None
+    ) -> tuple[list[str], dict]:
+        """Stage ``df``'s rows from the DRIVER, then :meth:`_publish`:
+        ONE collect (``toArrow``, the only Spark job), sorted by
+        ``layout_by``, one pyarrow-written file per distinct layout key
+        (null keys group together, so their rows keep a file of their
+        own).  The micro-batch writer: for a few dozen rows, a Spark
+        write job's task deserialization and driver-side job setup and
+        commit cost far more than the rows (OPTIMIZATION_r17.md), so it
+        is only for frames the driver can hold.  On an ANN table the
+        cell is a layout key too, as :meth:`_write_data` clusters by it."""
+        import pyarrow.parquet as pq
+
+        keys = list(layout_by or [])
+        if self.ann_col:
+            from .annindex import ANN_CELL
+
+            if ANN_CELL in df.columns and ANN_CELL not in keys:
+                keys.append(ANN_CELL)
+        rows = df.toArrow()
+        counts = [rows.num_rows] if rows.num_rows else []
+        if keys and counts:
+            rows = rows.sort_by([(c, "ascending") for c in keys])
+            # sorted, so each key's rows are one contiguous run; groups
+            # come out in first-seen order, i.e. run order
+            counts = (
+                rows.group_by(keys, use_threads=False)
+                .aggregate([([], "count_all")])["count_all"]
+                .to_pylist()
+            )
+        tmp = self._staging_dir()
+        os.makedirs(tmp)
+        start = 0
+        for i, n in enumerate(counts):
+            pq.write_table(
+                rows.slice(start, n), os.path.join(tmp, f"part-{i:05d}.parquet")
+            )
+            start += n
+        return self._publish(tmp, df)
+
+    def _staging_dir(self) -> str:
+        return os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
+
+    def _publish(self, tmp: str, df: DataFrame) -> tuple[list[str], dict]:
+        """The shared tail of both writers: move the parquet files
+        staged under ``tmp`` into ``data/`` (invisible until a commit
+        names them), remove ``tmp``, and return (file names, stats).
+        Each staged footer is opened ONCE, for its row count and, on
+        the small-commit path, its stats; a footer is kept only while
+        the commit can still take that path.  ``df`` is the written
+        frame: its schema reads the files back for the meta job."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        want_stats = bool(self.bloom_cols or self._effective_stats_cols())
         out = []
         rows_by_file = {}
+        # footers for the stats-only small-commit path; None once the
+        # commit must take the meta job (bloom columns, too many files)
+        footers = {} if want_stats and not self.bloom_cols else None
         for n in sorted(os.listdir(tmp)):
             if n.endswith(".parquet") and not n.startswith(("_", ".")):
                 src = os.path.join(tmp, n)
+                md = pq.read_metadata(src)
                 # zero-row part files (empty shuffle partitions) carry no
                 # information and would sit in the manifest stat-less
                 # (= never prunable) forever — drop them at the source
-                nrows = pq.ParquetFile(src).metadata.num_rows
-                if nrows == 0:
+                if md.num_rows == 0:
                     continue
                 final = f"{uuid.uuid4().hex}.parquet"
                 os.rename(src, os.path.join(self.data_dir, final))
                 out.append(final)
-                rows_by_file[final] = nrows
-        import shutil
-
+                rows_by_file[final] = md.num_rows
+                if footers is not None:
+                    footers[final] = md
+                    if len(footers) > _FOOTER_STATS_MAX_FILES:
+                        footers = None
         shutil.rmtree(tmp, ignore_errors=True)
         stats: dict = {}
-        if out and (self.bloom_cols or self._effective_stats_cols()):
-            if not self.bloom_cols and len(out) <= _FOOTER_STATS_MAX_FILES:
+        if out and want_stats:
+            if footers is not None:
                 # Stats-only SMALL commit: read min/max straight off the
                 # just-written parquet footers (the parity-pinned
                 # reference ``_file_stats``) — a handful of local footer
@@ -652,7 +724,7 @@ class ManifestTable:
                 # keep the ONE executor-side job — there the driver
                 # loop is the bottleneck, not the job launch.
                 for f in out:
-                    st = self._file_stats(os.path.join(self.data_dir, f))
+                    st = self._footer_stats(footers[f])
                     if st:
                         stats[f] = st
             else:
@@ -725,30 +797,39 @@ class ManifestTable:
         stats — the executable spec :meth:`_build_file_meta`'s
         executor-side data reduction is pinned identical to in pytest
         (the :meth:`_file_bloom` discipline).  The production write
-        path calls this ONLY on the stats-only small-commit fast path
-        (≤ ``_FOOTER_STATS_MAX_FILES`` files, no bloom columns — a few
-        local footer reads beat launching a Spark job); every larger or
-        bloom-indexed commit rides the one commit-time Spark job
-        (:meth:`_build_file_meta`), for which this stays the pinned
-        ground truth.  Timestamps/dates are
-        stored as ISO strings (order-preserving); columns whose footer
-        lacks min/max are simply omitted, which :meth:`pruned_files`
-        treats as must-scan."""
-        cols = self._effective_stats_cols()
-        if not cols:
+        path reads the same footers ONLY on the stats-only small-commit
+        fast path (≤ ``_FOOTER_STATS_MAX_FILES`` files, no bloom
+        columns — a few local footer reads beat launching a Spark job;
+        :meth:`_publish` hands the footer it already opened to
+        :meth:`_footer_stats`); every larger or bloom-indexed commit
+        rides the one commit-time Spark job (:meth:`_build_file_meta`),
+        for which this stays the pinned ground truth."""
+        if not self._effective_stats_cols():
             return {}
         import pyarrow.parquet as pq
 
-        md = pq.ParquetFile(path).metadata
+        return self._footer_stats(pq.read_metadata(path))
+
+    def _footer_stats(self, md) -> dict:
+        """Min/max of each stats column from one parquet footer
+        (``FileMetaData``).  Timestamps/dates are stored as ISO strings
+        (order-preserving; an instant-typed footer value is stored as
+        its naive UTC form, see ``_jsonable``); columns whose footer
+        lacks min/max, and decimal columns (which the manifest cannot
+        encode, and whose INT32/INT64-stored statistics pyarrow cannot
+        decode), are omitted, which :meth:`pruned_files` treats as
+        must-scan."""
+        cols = self._effective_stats_cols()
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         out = {}
         for col in cols:
-            if col not in idx:
+            i = idx.get(col)
+            if i is None or md.schema.column(i).logical_type.type == "DECIMAL":
                 continue
             lo = hi = None
             ok = md.num_row_groups > 0
             for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
+                st = md.row_group(rg).column(i).statistics
                 if st is None or not st.has_min_max:
                     ok = False
                     break
@@ -832,7 +913,7 @@ class ManifestTable:
         the stats in here retired the O(files-in-commit) driver loop
         on the LARGE-commit path (round-9 verdict watch item 1); the
         one deliberate exception is the stats-only SMALL-commit fast
-        path in ``_write_data``, which re-uses a BOUNDED
+        path in ``_publish``, which re-uses a BOUNDED
         (≤ ``_FOOTER_STATS_MAX_FILES``) driver footer loop because a
         handful of ~ms footer reads beat a ~1 s Spark job launch.
 
@@ -1453,8 +1534,21 @@ class ManifestTable:
         freshest snapshot inside the CAS loop, so two replayed attempts
         racing each other still commit exactly once."""
         df = self._ann_prepare(df)
-        new, stats = self._write_data(df)
-        df_schema = df.schema
+        return self._commit_append(self._write_data(df), df.schema, txn)
+
+    def _append_collected(
+        self, df: DataFrame, txn, layout_by: list[str] | None = None
+    ) -> dict | None:
+        """:meth:`append` for a frame the driver can hold (one streaming
+        micro-batch): staged by :meth:`_write_collected` instead of a
+        Spark write job, committed exactly as :meth:`append` commits."""
+        df = self._ann_prepare(df)
+        return self._commit_append(
+            self._write_collected(df, layout_by), df.schema, txn
+        )
+
+    def _commit_append(self, written, df_schema, txn) -> dict | None:
+        new, stats = written
 
         def mk(base: dict) -> dict:
             return {
@@ -2417,22 +2511,38 @@ def make_manifest_append_sink(
     of duplicate rows.  Distinct streams into one table need distinct
     ``app_id``s (per-app watermarks are independent).
 
-    ``layout_by``: cluster each batch's files by these columns before
-    the commit (repartition + in-partition sort) so the per-file
-    min/max recorded under ``table.stats_cols`` become TIGHT — the
+    The batch is written from the DRIVER, not by a Spark write job: one
+    ``toArrow`` collect runs the batch's plan (the trigger's only job),
+    and pyarrow writes the files, which commit as :meth:`ManifestTable.
+    append`'s do (:meth:`ManifestTable._append_collected`).  A trigger
+    of a few dozen rows would otherwise pay a whole ``FileFormatWriter``
+    job — per-task deserialization of the write job and driver-side job
+    setup and commit — for a few KB of output.
+
+    MEMORY CONTRACT: the sink holds one micro-batch's OUTPUT on the
+    driver, so only a caller whose source bounds a micro-batch may use
+    it.  The bounded callers: ``start_dau_job`` emits at most one row
+    per new spool file, whose paths the file source already holds on
+    the driver; ``start_ods_split_job`` is bounded by its Kafka
+    source's ``maxOffsetsPerTrigger`` (without it the first batch is
+    the topic's whole backlog); ``bench.py --streaming``'s
+    ``streaming_manifest_sink`` reads with ``maxFilesPerTrigger``, about
+    40k short documents (~13 MB of Arrow) per trigger.  Bulk loads go
+    through :meth:`ManifestTable.append`, whose Spark write scales out.
+
+    ``layout_by``: one file per distinct value of these columns (rows
+    sorted by them; null keys share a file), so the per-file min/max
+    recorded under ``table.stats_cols`` become TIGHT — the
     manifest-level analogue of hive ``partitionBy`` that makes
     :meth:`ManifestTable.read_pruned` / :meth:`ManifestTable.upsert`
-    skip whole files.  One small per-micro-batch shuffle, exactly the
-    cost ``partitionBy`` paid in the raw layout."""
+    skip whole files.  Without it the batch is one file."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from ..caching import begin_query
 
         begin_query()
-        if layout_by:
-            batch_df = batch_df.repartition(*layout_by).sortWithinPartitions(
-                *layout_by
-            )
-        table.append(batch_df, txn=(app_id, int(batch_id)))
+        table._append_collected(
+            batch_df, txn=(app_id, int(batch_id)), layout_by=layout_by
+        )
 
     return sink

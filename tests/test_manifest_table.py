@@ -1461,3 +1461,23 @@ def test_streaming_outputs_write_only_through_manifest():
         if p.name != "manifest.py" and re.search(r"\.write\s*\.", p.read_text())
     )
     assert raw_writers == [], raw_writers
+
+
+def test_streaming_driver_side_parquet_writes_stay_in_manifest():
+    """The append sink writes its micro-batch files with pyarrow from
+    the driver; that writer lives inside ManifestTable, so no other
+    streaming module may write parquet with ``pq.write_table`` or a
+    ``ParquetWriter`` past the commit protocol."""
+    import re
+    from pathlib import Path
+
+    import gmallrealtime02_spark.streaming as streaming_pkg
+
+    pkg = Path(streaming_pkg.__file__).parent
+    arrow_writers = sorted(
+        p.name
+        for p in pkg.glob("*.py")
+        if p.name != "manifest.py"
+        and re.search(r"\bwrite_table\s*\(|\bParquetWriter\b", p.read_text())
+    )
+    assert arrow_writers == [], arrow_writers
